@@ -106,11 +106,13 @@ def main() -> None:
         "dedup_docs_per_hour": round(n_docs / dedup_wall * 3600.0, 1),
         "host_probe_4proc": host_probe,
     }
-    out.update(_normalized_vs_previous(timings, host_probe))
+    out.update(_normalized_vs_previous(timings, host_probe, int(cpus)))
     print(json.dumps(out))
 
 
-def _normalized_vs_previous(timings: dict, host_probe: dict) -> dict:
+def _normalized_vs_previous(
+    timings: dict, host_probe: dict, cpus: int, bench_dir: str | None = None
+) -> dict:
     """Probe-normalize this run's walls against the PREVIOUS round's stamp
     so cross-round tables are noise-corrected by construction (this host's
     delivered per-core CPU swings 2-6x between phases — see the honesty box
@@ -119,12 +121,14 @@ def _normalized_vs_previous(timings: dict, host_probe: dict) -> dict:
     kinds of (rate_now / rate_prev) — if the host is currently FASTER than
     it was for the previous round's run, raw walls flatter this rev, so
     they are scaled UP into the previous round's phase (and vice versa).
-    Emits nothing if no previous stamped round exists."""
+    Emits nothing if no previous stamped round exists, or if that round ran
+    on a different core count: a probe ratio cannot carry walls across
+    core counts."""
     import glob
     import math
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
+    here = bench_dir or os.path.dirname(os.path.abspath(__file__))
     prev_files = sorted(
         glob.glob(os.path.join(here, "BENCH_r*.json")),
         key=lambda f: int(re.search(r"BENCH_r(\d+)", f).group(1)),
@@ -138,6 +142,8 @@ def _normalized_vs_previous(timings: dict, host_probe: dict) -> dict:
         # the driver wraps bench.py's JSON line under "parsed"
         if "parsed" in prev and isinstance(prev["parsed"], dict):
             prev = prev["parsed"]
+        if int(prev["cpus"]) != cpus:
+            return {}
         prev_probe = prev["host_probe_4proc"]
         ratios = [
             host_probe[k] / prev_probe[k]

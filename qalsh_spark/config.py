@@ -126,9 +126,3 @@ class DedupConfig:
     @property
     def simhash_n_keys(self) -> int:
         return math.comb(self.simhash_blocks, self.simhash_key_blocks)
-
-
-def effective_parallelism(n_docs: int, target_rows_per_task: int = 250_000) -> int:
-    """Partition-count heuristic: at 10^12 docs this yields ~4M tasks over the
-    cluster; at test scale it stays small enough to avoid scheduling overhead."""
-    return max(8, min(200_000, math.ceil(n_docs / target_rows_per_task)))

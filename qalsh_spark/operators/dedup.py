@@ -7,7 +7,7 @@ DuckDB oracle can cross-check them.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from qalsh_spark.functions.text import content_md5
 from qalsh_spark.operators.components import _CKPT_LEVEL
@@ -26,17 +26,6 @@ def exact_dup_groups(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
         keyed.groupBy("text_key")
         .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("keep_id"))
         .filter(F.col("n_dups") > 1)
-    )
-
-
-def exact_dedup(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly one row (min id) per normalized text — the classic
-    keep-first dedup, as a window filter (single shuffle)."""
-    w = Window.partitionBy(content_md5(F.col("text"))).orderBy(F.col(id_col))
-    return (
-        documents.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 

@@ -3,84 +3,83 @@ computing the exact l_p distance once a candidate's collision count passes
 the threshold (/root/reference/methods/qalsh.h:444-446, exact kernels at
 methods/util.h:211-464).
 
-Mirroring the reference's verify-time page fetch (methods/util.h:171-193:
-the raw point is NOT stored in the index; it is re-read from the paged store
-only for candidates), the signatures table here is narrow (minhash 128xint32,
-simhash int64 — no shingle sets), and the exact-Jaccard verification
-re-derives each candidate document's shingle set from its text via a join
-back to the documents table + a vectorized Arrow UDF.  Only docs that appear
-in a surviving candidate pair pay that cost — a tiny fraction of the corpus
-at scale, exactly like the reference's "100 + k - 1 verified points" budget.
+One pass, one join per pair endpoint, one Python crossing:
 
-A JVM-side prefilter runs before the Python jaccard: positionwise minhash
-agreement (zip_with + aggregate, whole-stage codegen) estimates Jaccard and
-discards pairs that cannot plausibly reach the threshold — the moral analog
-of the reference's early-exit distance accumulation (methods/util.h:261-262),
-done batch-wise instead of element-wise.  The simhash lane is pure JVM SQL:
-`bit_count(a ^ b)` — no Python at all.
+1. One narrow row per document: the signatures table (minhash as position
+   tags, simhash, zipped (k1, k2) suffix tuples) joined to the documents
+   table for its raw text.  As in the reference's verify-time page fetch
+   (methods/util.h:171-193: the raw point is NOT stored in the index; it is
+   re-read from the paged store only for candidates), the signatures carry
+   no shingle sets — the text is fetched here and shingled only where a
+   pair needs an exact score.
+2. Each pair joins that row once for `a` and once for `b`.
+3. Every JVM-decidable rule runs before any Python: positionwise minhash
+   agreement (one array_intersect of position tags) estimates Jaccard and
+   discards minhash pairs that cannot plausibly reach the threshold — the
+   moral analog of the reference's early-exit distance accumulation
+   (methods/util.h:261-262), done batch-wise instead of element-wise; the
+   simhash rule is `bit_count(a ^ b)` and the suffix rule a 128-bit tuple
+   overlap, both pure JVM SQL.
+4. One Arrow-batched UDF scores the survivors: it shingles each text at
+   most once per batch (memo on doc_id) and computes the exact Jaccard only
+   for rows whose estimate passed the prefilter.
+
+Fewer, larger Python crossings, after *Accelerating Python UDFs in
+Vectorized Query Execution* (CIDR 2022).  Nothing here is cached: each
+input is read once per endpoint join.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from qalsh_spark import kernels as K
 from qalsh_spark.config import DedupConfig
-from qalsh_spark.operators.components import _CKPT_LEVEL
 from qalsh_spark.operators.banding import LANE_MINHASH, LANE_SIMHASH, LANE_SUFFIX, lane_name_col
 
 
-@F.pandas_udf(T.DoubleType())
-def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact Jaccard of two sorted shingle arrays; null-safe (missing side
-    -> 0.0) so it can run over a left-joined pair stream in one pass.
+def jaccard_pairs_udf(shingle_k: int):
+    """(a, b, text_a, text_b, need) -> exact Jaccard of the two texts'
+    shingle sets where `need`, else 0.0.
 
-    Deliberately a per-row loop: the batch-level alternative (one global
-    lexsort over the Arrow batch's (pair, value) rows, adjacent-dup count
-    per pair) was implemented and MEASURED 4-20x SLOWER than this loop at
-    every representative shingle-set size (20/50/200 elements, 10-20k
-    pairs/batch: e.g. 87 ms loop vs 1862 ms lexsort at size 200) — the
-    per-call np.intersect1d on presorted unique arrays is C-speed and the
-    Python overhead per row is O(1), while the global sort pays
-    O(total log total) on data that was already sorted per side."""
-    out = np.zeros(len(a), dtype=np.float64)
-    for i in range(len(a)):
-        xa, xb = a.iat[i], b.iat[i]
-        if xa is None or xb is None:
-            continue
-        out[i] = K.jaccard_sorted(
-            np.asarray(xa, dtype=np.int64), np.asarray(xb, dtype=np.int64)
-        )
-    return pd.Series(out)
+    Shingles with the signing stage's kernels, at most once per doc per
+    Arrow batch (memo keyed on doc_id: a hub doc in many pairs is shingled
+    once).  The per-row intersect is deliberately a loop: a batch-level
+    global lexsort over (pair, value) rows was MEASURED 4-20x SLOWER at
+    every representative shingle-set size — np.intersect1d on presorted
+    unique arrays is C-speed and the per-row Python overhead is O(1)."""
 
+    def shingles(doc_id, text, memo: dict) -> np.ndarray:
+        sh = memo.get(doc_id)
+        if sh is None:
+            sh = memo[doc_id] = K.shingle_hashes(
+                K.hash_tokens(K.tokenize(text or "")), shingle_k
+            )
+        return sh
 
-def shingle_set_udf(shingle_k: int):
-    """text -> sorted unique shingle hashes (array<long>), same kernel the
-    signing stage used — the verify-time 'raw point fetch'."""
+    @F.pandas_udf(T.DoubleType())
+    def _udf(
+        a: pd.Series, b: pd.Series, text_a: pd.Series, text_b: pd.Series,
+        need: pd.Series,
+    ) -> pd.Series:
+        out = np.zeros(len(a), dtype=np.float64)
+        memo: dict = {}
+        ids_a, ids_b = a.to_numpy(), b.to_numpy()
+        for i in np.flatnonzero(need.to_numpy(dtype=bool)):
+            out[i] = K.jaccard_sorted(
+                shingles(ids_a[i], text_a.iat[i], memo),
+                shingles(ids_b[i], text_b.iat[i], memo),
+            )
+        return pd.Series(out)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(text: pd.Series) -> pd.Series:
-        return text.map(
-            lambda t: K.shingle_hashes(
-                K.hash_tokens(K.tokenize(t or "")), shingle_k
-            ).view(np.int64)
-        )
-
-    return _udf
-
-
-def minhash_agreement(col_a: str, col_b: str):
-    """Fraction of positions where two minhash arrays agree — an unbiased
-    Jaccard estimator, computed entirely JVM-side."""
-    return F.aggregate(
-        F.zip_with(F.col(col_a), F.col(col_b), lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.size(F.col(col_a))
+    # Nondeterministic only to pin the plan: Catalyst would otherwise push
+    # the acceptance filter through the projection and extract the UDF
+    # twice (one Arrow crossing for the filter, one for the column).
+    return _udf.asNondeterministic()
 
 
 def _position_tagged(minhash_col):
@@ -102,12 +101,12 @@ def verify_pairs(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
-    documents_with_id: DataFrame | None = None,
+    documents_with_id: DataFrame,
     prefilter_margin: float = 0.2,
-    persists: list | None = None,
 ) -> DataFrame:
-    """pairs(a,b,lane_id) x signatures -> edges(a, b, lanes, jaccard, hamming)
-    for pairs passing their lane's threshold.
+    """pairs(a,b,lane_id) x signatures x documents_with_id(doc_id, text) ->
+    edges(a, b, jaccard, hamming, lanes) for pairs passing their lane's
+    threshold.
 
     Per-lane acceptance (the oracle mirrors these rules exactly):
       minhash: exact Jaccard >= cfg.jaccard_threshold
@@ -117,125 +116,46 @@ def verify_pairs(
                only if the two docs share a full (k1, k2) tuple — the
                independent check hash makes acceptance a 128-bit equality
                test, so birthday collisions at 10^11-key scale cannot
-               merge unrelated clusters (the arrays_zip/arrays_overlap is
-               pure JVM).
+               merge unrelated clusters.
 
-    `documents_with_id(doc_id, text)` supplies the raw text for the exact-
-    Jaccard re-derivation; when omitted, signatures must still carry a
-    `shingles` column (legacy path for callers that precomputed it).
+    `jaccard` is the exact score wherever the minhash estimate passed the
+    prefilter (threshold - prefilter_margin), else 0.0.
     """
-    n_perm = cfg.num_perm
-    has_suffix_check = (
-        "suffix_keys" in signatures.columns
-        and "suffix_checks" in signatures.columns
-    )
-    sig_cols = [
-        F.col("doc_id"),
-        _position_tagged(F.col("minhash")).alias("mh_tags"),
-        F.col("simhash"),
-    ]
-    if has_suffix_check:
-        # zip BEFORE any rename so both join sides carry identical struct
-        # field names (required for arrays_overlap equality)
-        sig_cols.append(
-            F.arrays_zip(F.col("suffix_keys"), F.col("suffix_checks")).alias("sfx")
-        )
-    sig = signatures.select(*sig_cols)
-    ren_a = {"mh_tags": "mh_a", "simhash": "fp_a"}
-    ren_b = {"mh_tags": "mh_b", "simhash": "fp_b"}
-    if has_suffix_check:
-        ren_a["sfx"] = "sfx_a"
-        ren_b["sfx"] = "sfx_b"
-    j = (
-        pairs.join(sig.withColumnRenamed("doc_id", "a"), on="a")
-        .withColumnsRenamed(ren_a)
-        .join(sig.withColumnRenamed("doc_id", "b"), on="b")
-        .withColumnsRenamed(ren_b)
-    )
-    j = j.withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-    j = j.withColumn(
-        "mh_est",
-        F.size(F.array_intersect(F.col("mh_a"), F.col("mh_b"))) / F.lit(n_perm),
-    )
+    # zip BEFORE any rename so both join sides carry identical struct field
+    # names (required for arrays_overlap equality)
+    docs = signatures.select(
+        "doc_id",
+        _position_tagged(F.col("minhash")).alias("mh"),
+        F.col("simhash").alias("fp"),
+        F.arrays_zip("suffix_keys", "suffix_checks").alias("sfx"),
+    ).join(documents_with_id.select("doc_id", "text"), on="doc_id")
 
-    # JVM prefilter: only pairs whose estimated Jaccard could plausibly reach
-    # the gate pay the Python exact-Jaccard cost.
-    est_ok = F.col("mh_est") >= F.lit(cfg.jaccard_threshold - prefilter_margin)
-    is_minhash = F.col("lane_id") == F.lit(LANE_MINHASH)
-    is_simhash = F.col("lane_id") == F.lit(LANE_SIMHASH)
-    is_suffix = F.col("lane_id") == F.lit(LANE_SUFFIX)
-    passes_simhash = F.col("hamming") <= F.lit(cfg.hamming_max)
-    # 128-bit suffix check: some (k1, k2) tuple shared by both sides.  The
-    # fat sfx arrays are dropped right here — they never enter the persisted
-    # pair rows or any later shuffle.
-    suffix_ok = (
-        F.arrays_overlap(F.col("sfx_a"), F.col("sfx_b"))
-        if has_suffix_check
-        else F.lit(True)
-    )
-    # Persist the surviving narrow pair rows: they feed the candidate-id
-    # derivation AND the final scoring pass; without this the signature
-    # joins + the interpreted higher-order agreement expression would
-    # re-execute once per consumer.
-    j = (
-        j.filter((is_minhash & est_ok) | is_simhash | (is_suffix & suffix_ok))
-        .select("a", "b", "lane_id", "hamming", "mh_est")
-        .persist(_CKPT_LEVEL)
-    )
-    if persists is not None:
-        persists.append(j)
+    def side(s: str) -> DataFrame:
+        return docs.select(
+            *(F.col(c).alias(f"{c}_{s}") for c in ("mh", "fp", "sfx", "text")),
+            F.col("doc_id").alias(s),
+        )
 
-    # Exact Jaccard for pairs that need it: re-derive shingle sets for the
-    # candidate docs only (verify-time raw fetch), then LEFT-join both sides
-    # and score in one linear pass (null side -> jaccard 0.0, which only
-    # matters for lanes whose acceptance ignores jaccard anyway).
-    needs_exact = j.filter(est_ok)
-    if documents_with_id is not None:
-        cand_ids = (
-            needs_exact.select(F.col("a").alias("doc_id"))
-            .unionByName(needs_exact.select(F.col("b").alias("doc_id")))
-            .distinct()
-        )
-        # persist: consumed twice (a-side and b-side joins) — without it the
-        # shingle UDF would run twice per candidate document
-        cand_sh = (
-            cand_ids.join(documents_with_id.select("doc_id", "text"), on="doc_id")
-            .select(
-                "doc_id",
-                shingle_set_udf(cfg.shingle_k)(F.col("text")).alias("shingles"),
-            )
-            .persist(_CKPT_LEVEL)
-        )
-        if persists is not None:
-            persists.append(cand_sh)
-    else:  # legacy: shingles precomputed on the signatures table
-        if "shingles" not in signatures.columns:
-            raise ValueError(
-                "verify_pairs: pass documents_with_id(doc_id, text) — "
-                "sign_documents no longer emits a 'shingles' column, so the "
-                "legacy precomputed-shingles path needs a signatures table "
-                "that carries one"
-            )
-        cand_sh = signatures.select("doc_id", "shingles")
-    j = (
-        j.join(
-            cand_sh.withColumnsRenamed({"doc_id": "a", "shingles": "sh_a"}),
-            on="a",
-            how="left",
-        )
-        .join(
-            cand_sh.withColumnsRenamed({"doc_id": "b", "shingles": "sh_b"}),
-            on="b",
-            how="left",
-        )
-        .withColumn("jaccard", jaccard_udf(F.col("sh_a"), F.col("sh_b")))
-        .drop("sh_a", "sh_b")
+    j = pairs.join(side("a"), on="a").join(side("b"), on="b")
+    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    mh_est = F.size(F.array_intersect("mh_a", "mh_b")) / F.lit(cfg.num_perm)
+    need = mh_est >= F.lit(cfg.jaccard_threshold - prefilter_margin)
+    lane = F.col("lane_id")
+    survivors = j.filter(
+        ((lane == LANE_MINHASH) & need)
+        | ((lane == LANE_SIMHASH) & (hamming <= cfg.hamming_max))
+        | ((lane == LANE_SUFFIX) & F.arrays_overlap("sfx_a", "sfx_b"))
+    ).select(
+        "a", "b", "lane_id", "text_a", "text_b",
+        hamming.alias("hamming"), need.alias("need"),
     )
-
-    passes_jaccard = F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
-    edges = j.filter(
-        (is_minhash & passes_jaccard) | (is_simhash & passes_simhash) | is_suffix
-    ).select("a", "b", "lane_id", "jaccard", "hamming")
+    scored = survivors.withColumn(
+        "jaccard",
+        jaccard_pairs_udf(cfg.shingle_k)("a", "b", "text_a", "text_b", "need"),
+    )
+    edges = scored.filter(
+        (lane != LANE_MINHASH) | (F.col("jaccard") >= cfg.jaccard_threshold)
+    )
     # One edge per (a,b): keep the strongest evidence, fold lanes.
     return (
         edges.groupBy("a", "b")

@@ -127,15 +127,9 @@ class DedupPipeline:
         )
 
     def verify(
-        self,
-        pairs: DataFrame,
-        signatures: DataFrame,
-        documents_with_id: DataFrame | None = None,
-        persists: list | None = None,
+        self, pairs: DataFrame, signatures: DataFrame, documents_with_id: DataFrame
     ) -> DataFrame:
-        return verify_pairs(
-            pairs, signatures, self.cfg, documents_with_id, persists=persists
-        )
+        return verify_pairs(pairs, signatures, self.cfg, documents_with_id)
 
     def _escalation_pairs(
         self, signatures: DataFrame, edges: DataFrame, persists: list
@@ -253,7 +247,7 @@ class DedupPipeline:
         pairs = stage("pairs", make_pairs)
 
         def make_edges():
-            verified = self.verify(pairs, signatures, prepared, persists=persists)
+            verified = self.verify(pairs, signatures, prepared)
             edges_df = verified.unionByName(exact_edges)
             if self.escalate:
                 # localCheckpoint (not persist): the escalation pass embeds
@@ -272,9 +266,7 @@ class DedupPipeline:
                 pairs2 = self._escalation_pairs(signatures, edges_df, persists)
                 # endpoints of escalated pairs are all unmatched docs, so
                 # the recovered edges are disjoint from the first pass
-                verified2 = self.verify(
-                    pairs2, signatures, prepared, persists=persists
-                )
+                verified2 = self.verify(pairs2, signatures, prepared)
                 edges_df = edges_df.unionByName(verified2)
             return edges_df
 
@@ -314,14 +306,6 @@ def _prepare(documents: DataFrame) -> DataFrame:
         F.length("text").alias("text_len"),
         F.xxhash64("text").alias("text_hash"),
     )
-
-
-def _with_text(documents: DataFrame) -> DataFrame:
-    from qalsh_spark.functions.signatures import extract_text_udf
-
-    if "text" in documents.columns:
-        return documents.select("url", "text")
-    return documents.select("url", extract_text_udf("html").alias("text"))
 
 
 def _plan_fingerprint(df: DataFrame) -> str:

@@ -1,8 +1,12 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults encode the physical-execution posture from SURVEY.md §4: AQE on
-(runtime re-plan + skew-join splitting), Arrow on (every Python crossing is a
-vectorized batch), partial aggregation and broadcast joins left to Catalyst.
+Defaults encode the physical-execution posture from SURVEY.md §4: Arrow on
+(every Python crossing is a vectorized batch), partial aggregation and
+broadcast joins left to Catalyst.  AQE (runtime re-plan + skew-join
+splitting) is on in the session default, but the entry points turn it off
+below ~10M input docs (`jobs/dedup.py --aqe auto`, `bench.py`): at that size
+its per-exchange re-planning latency outweighs its benefits, and skew is
+handled structurally (bucket caps + star pairing).
 """
 
 from __future__ import annotations

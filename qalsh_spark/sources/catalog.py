@@ -103,11 +103,6 @@ class StageCatalog:
         )
         row.write.mode("append").parquet(runs_path)
 
-    def partition_lineage(self, df: DataFrame) -> DataFrame:
-        """Per-partition row counts — the per-partition lineage signal
-        (north rule).  spark_partition_id is JVM-side."""
-        return df.groupBy(F.spark_partition_id().alias("partition_id")).count()
-
 
 def _parquet_rows(path: str) -> int:
     """Row count from parquet footers (pyarrow metadata read) — replaces the

@@ -156,23 +156,11 @@ def run_oracle(
     # --- verify (operators/verify.py per-lane rules) --------------------
     edges: set[tuple[int, int]] = set(exact_edges)
     for x, y, lane in pairs:
-        sx, sy = sigs[x], sigs[y]
-        if lane == "suffix":
-            if suffix_tuples.get(x, set()) & suffix_tuples.get(y, set()):
-                edges.add((x, y))
-        elif lane == "simhash":
-            ham = bin(
-                np.uint64(np.int64(sx["simhash"]).astype(np.uint64))
-                ^ np.uint64(np.int64(sy["simhash"]).astype(np.uint64))
-            ).count("1")
-            if ham <= cfg.hamming_max:
-                edges.add((x, y))
-        else:  # minhash
-            jac = K.jaccard_sorted(
-                sx["shingles"].view(np.uint64), sy["shingles"].view(np.uint64)
-            )
-            if jac >= cfg.jaccard_threshold:
-                edges.add((x, y))
+        if lane_accepts(
+            lane, sigs[x], sigs[y],
+            suffix_tuples.get(x, set()), suffix_tuples.get(y, set()), cfg,
+        ):
+            edges.add((x, y))
 
     # --- cluster (union-find == exact connected components) -------------
     uf = UnionFind()
@@ -186,6 +174,29 @@ def run_oracle(
         doc_ids=np.array(ids, dtype=np.int64), signatures=sigs, pairs=pairs,
         edges=edges, clusters=clusters,
     )
+
+
+def hamming64(x: int, y: int) -> int:
+    return bin(
+        np.uint64(np.int64(x).astype(np.uint64))
+        ^ np.uint64(np.int64(y).astype(np.uint64))
+    ).count("1")
+
+
+def lane_accepts(
+    lane: str, sx: dict, sy: dict, tx: set, ty: set, cfg: DedupConfig
+) -> bool:
+    """operators/verify.py's acceptance rule for one candidate pair on
+    `lane`, from the two docs' signatures (`sx`, `sy`, as
+    kernels.sign_document returns them) and (k1, k2) suffix tuples."""
+    if lane == "suffix":
+        return bool(tx & ty)
+    if lane == "simhash":
+        return hamming64(sx["simhash"], sy["simhash"]) <= cfg.hamming_max
+    jac = K.jaccard_sorted(
+        sx["shingles"].view(np.uint64), sy["shingles"].view(np.uint64)
+    )
+    return jac >= cfg.jaccard_threshold
 
 
 def cluster_pairs(clusters: dict[int, int]) -> set[tuple[int, int]]:

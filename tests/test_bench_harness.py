@@ -58,3 +58,32 @@ def test_ledger_rows_pair_same_rev_and_corpus():
     assert rows, "ledger exists but is empty"
     for r in rows[-4:]:
         assert {"wall_sec", "cores", "n_docs_corpus", "cpu_probe"} <= set(r)
+
+
+def _stamp_round(tmp_path, cpus: int) -> None:
+    (tmp_path / "BENCH_r05.json").write_text(json.dumps({
+        "cpus": cpus,
+        "parsed": {
+            "cpus": cpus,
+            "host_probe_4proc": {"python_loop": 10.0, "numpy_matmul": 100.0},
+        },
+    }))
+
+
+def test_normalization_against_same_core_count_round(tmp_path):
+    from bench import _normalized_vs_previous
+
+    _stamp_round(tmp_path, cpus=4)
+    probe = {"python_loop": 20.0, "numpy_matmul": 200.0}  # host 2x faster
+    out = _normalized_vs_previous({"q": 3.0}, probe, 4, str(tmp_path))
+    assert out["normalized_vs"] == "BENCH_r05.json"
+    assert out["probe_ratio"] == 2.0
+    assert out["normalized_queries"] == {"q": 6.0}
+
+
+def test_no_normalization_against_other_core_count_round(tmp_path):
+    from bench import _normalized_vs_previous
+
+    _stamp_round(tmp_path, cpus=32)
+    probe = {"python_loop": 20.0, "numpy_matmul": 200.0}
+    assert _normalized_vs_previous({"q": 3.0}, probe, 4, str(tmp_path)) == {}

@@ -54,8 +54,8 @@ def main() -> None:
                     help="pstable only: projection count; default auto-tunes"
                     " from (c, p, n) with the reference's formula"
                     " (methods/qalsh.h:228-235, kernels.pstable_m)")
-    ap.add_argument("--max-rounds", type=int, default=0,
-                    help="pstable only: virtual-rehashing rounds (0 = single "
+    ap.add_argument("--max-rounds", type=int, default=1,
+                    help="pstable only: virtual-rehashing rounds (1 = single "
                     "pass); each round doubles the bucket width for queries "
                     "not yet certified by the reference's kth-dist <= c*R "
                     "stop rule")
@@ -128,10 +128,10 @@ def main() -> None:
         topk = lsh_topk(emb, queries, k=args.k)
     elif args.algo == "pstable":
         p = {"cosine": 2.0, "l2": 2.0, "l1": 1.0}.get(metric, metric)
-        rehash_persists: list = []
+        pstable_persists: list = []
         topk = pstable_topk(
             emb, queries, k=args.k, p=float(p), w=args.w, radius=args.radius,
-            m=args.m, max_rounds=args.max_rounds, persists=rehash_persists,
+            m=args.m, max_rounds=args.max_rounds, persists=pstable_persists,
         )
     elif args.algo == "ivf":
         topk = ivf_topk(emb, queries, k=args.k)
@@ -150,9 +150,9 @@ def main() -> None:
         n_rows = topk.count()
     wall = time.time() - t0
     if args.algo == "pstable":
-        # release the rehash rounds' per-round caches (the result is
-        # already written / checkpointed, so lineage no longer needs them)
-        for df in rehash_persists:
+        # release the rounds' caches (the result is already written /
+        # checkpointed, so lineage no longer needs them)
+        for df in pstable_persists:
             df.unpersist()
 
     metrics: dict = {

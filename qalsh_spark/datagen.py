@@ -356,29 +356,6 @@ def generate_embeddings(
     )
 
 
-def write_embeddings(path: str, n_vecs: int, d: int = 64, seed: int = 42) -> EmbeddingSet:
-    """Write an embeddings.parquet (vec_id, embedding, label) shaped like the
-    driver testdata table, plus gold near-dup pairs."""
-    e = generate_embeddings(n_vecs, d, seed)
-    os.makedirs(path, exist_ok=True)
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(e.vec_ids, pa.int64()),
-            "embedding": pa.array([list(map(float, row)) for row in e.X], pa.list_(pa.float32())),
-            "label": pa.array(e.labels, pa.int32()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(path, "embeddings.parquet"), row_group_size=2048)
-    gold = pa.table(
-        {
-            "a": pa.array([a for a, _ in e.gold_near_pairs], pa.int64()),
-            "b": pa.array([b for _, b in e.gold_near_pairs], pa.int64()),
-        }
-    )
-    pq.write_table(gold, os.path.join(path, "gold_near_pairs.parquet"))
-    return e
-
-
 def cached_corpus(n_docs: int, seed: int = 42, root: str = "/root/repo/.cache") -> str:
     """Idempotent corpus materialization for tests/bench."""
     path = os.path.join(root, f"corpus_n{n_docs}_s{seed}")

@@ -132,8 +132,8 @@ def _sign_batches(cfg: DedupConfig):
                 out["simhash"][i] = s["simhash"]
                 out["simhash_keys"][i] = s["simhash_keys"]
                 # suffix lane keys in the SAME text pass: one Python stage,
-                # one scan, no separate repartition (operators/suffix.py
-                # keeps a standalone path for ad-hoc use).  k1 buckets;
+                # one scan, no separate repartition (the suffix lane's one
+                # signing path, operators/banding.LANE_SUFFIX).  k1 buckets;
                 # the aligned k2 check hash makes edge acceptance a 128-bit
                 # test (kernels.suffix_key_pairs_for_text).
                 k1, k2 = K.suffix_key_pairs_for_text(

@@ -14,8 +14,8 @@ Reference lineage:
 - The fixed seed mirrors `srand(6)` at methods/main.cc:152 — index builds are
   reproducible.
 - `simhash64` adds the complementary bitwise fingerprint lane (Hamming<=h).
-- `anchors`/`suffixes_for_text` implement the content-defined sampling that
-  feeds the exact-substring (suffix) lane.
+- `anchors`/`suffix_key_pairs_for_text` implement the content-defined
+  sampling that feeds the exact-substring (suffix) lane.
 
 All functions are deterministic, vectorized, and dependency-free (NumPy only).
 """
@@ -400,29 +400,6 @@ def pstable_cells_matrix(
     return np.floor((X @ planes.T + offsets[None, :]) / w).astype(np.int64)
 
 
-def pstable_band_keys_matrix(
-    X: np.ndarray,
-    planes: np.ndarray,
-    offsets: np.ndarray,
-    w: float,
-    bands: int,
-    rows: int,
-) -> np.ndarray:
-    """(n, d) float matrix -> (n, bands) int64 quantized p-stable band keys:
-    cell_i = floor((a_i . x + b_i) / w), each band's `rows` cells fold into
-    one mixed 64-bit key (same fold discipline as band_hashes_matrix, band
-    index mixed in so cross-band keys never collide)."""
-    n = X.shape[0]
-    cells = pstable_cells_matrix(X, planes, offsets, w)
-    cc = cells.view(np.uint64).reshape(n, bands, rows)
-    with np.errstate(over="ignore"):
-        h = np.full((n, bands), _M1, dtype=np.uint64)
-        for j in range(rows):
-            h = (h ^ cc[:, :, j]) * _M2
-        h ^= (np.arange(bands, dtype=np.uint64) + np.uint64(1)) * _M4
-    return _mix64(h).view(np.int64)
-
-
 # --- Drusilla representative sampling (QALSH+ block sketches) ----------------
 
 DRUSILLA_ANGLE = np.pi / 8.0  # close-angle suppression threshold
@@ -522,34 +499,26 @@ def anchors(text: str, window: int = 16, gap: int = 32) -> np.ndarray:
     return pos.astype(np.int64)
 
 
-def suffixes_for_text(
-    text: str, window: int = 16, gap: int = 32, suffix_len: int = 256, lcp_min: int = 100
-) -> list[str]:
-    """Sampled suffixes (anchor -> anchor+suffix_len chars). Suffixes shorter
-    than lcp_min can never witness a qualifying LCP and are dropped."""
-    out = []
-    for p in anchors(text, window, gap):
-        s = text[int(p) : int(p) + suffix_len]
-        if len(s) >= lcp_min:
-            out.append(s)
-    return out
-
-
 def suffix_key_pairs_for_text(
     text: str, window: int = 16, gap: int = 32, lcp_min: int = 100
 ) -> tuple[np.ndarray, np.ndarray]:
     """(k1, k2) aligned int64 key arrays, one entry per content-defined
     anchor: two INDEPENDENT polynomial hashes (different radix, different
     pre-finalizer constant) of the same `lcp_min` bytes after the anchor.
+    Anchors with < lcp_min bytes remaining can never witness a qualifying
+    run and are dropped.
 
-    k1 is the bucket key (identical to `suffix_keys_for_text`); k2 is the
-    verify-time check hash.  A suffix edge is accepted only when both docs
-    share a full (k1, k2) tuple — a 128-bit equality test.  At 10^9-doc /
-    ~10^11-key scale, 64-bit birthday collisions produce a handful of false
-    bucket merges (and a false dedup edge silently merges unrelated
-    clusters); requiring the independent second hash pushes the odds to
-    2^-128 — beyond corpus scale — while the high-volume bucket shuffle
-    still carries only the single 8-byte k1."""
+    k1 is the bucket key: two suffixes have LCP >= lcp_min IFF their first
+    lcp_min bytes are equal IFF their keys are equal, so equality bucketing
+    on k1 IS the (first-stage) verification and the engine never shuffles
+    suffix strings.  k2 is the verify-time check hash.  A suffix edge is
+    accepted only when both docs share a full (k1, k2) tuple — a 128-bit
+    equality test.  At 10^9-doc / ~10^11-key scale, 64-bit birthday
+    collisions produce a handful of false bucket merges (and a false dedup
+    edge silently merges unrelated clusters); requiring the independent
+    second hash pushes the odds to 2^-128 — beyond corpus scale — while
+    the high-volume bucket shuffle still carries only the single 8-byte
+    k1."""
     data = np.frombuffer(text.encode("utf-8", "surrogatepass"), dtype=np.uint8)
     n = len(data)
     pos = anchors(text, window, gap)
@@ -571,35 +540,6 @@ def suffix_key_pairs_for_text(
     # sorted ascending to keep output deterministic
     _, first = np.unique(h1, return_index=True)
     return h1[first].view(np.int64), h2[first].view(np.int64)
-
-
-def suffix_keys_for_text(
-    text: str, window: int = 16, gap: int = 32, lcp_min: int = 100
-) -> np.ndarray:
-    """Unique int64 bucket keys, one per content-defined anchor: the
-    polynomial hash of the `lcp_min` bytes starting at the anchor.
-
-    Key insight replacing the old payload+LCP verify: two suffixes have
-    LCP >= lcp_min IFF their first lcp_min bytes are equal IFF their keys
-    are equal — so equality bucketing on this key IS the (first-stage)
-    verification, and the engine never has to shuffle suffix strings at
-    all.  Edge acceptance additionally requires the independent check hash
-    (`suffix_key_pairs_for_text`) to match, closing the 64-bit birthday
-    window.  Anchors with < lcp_min bytes remaining can never witness a
-    qualifying run and are dropped."""
-    k1, _ = suffix_key_pairs_for_text(text, window, gap, lcp_min)
-    return k1
-
-
-def lcp(a: str, b: str) -> int:
-    """Longest common prefix length of two strings (vectorized over bytes)."""
-    xa = np.frombuffer(a.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    xb = np.frombuffer(b.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    n = min(len(xa), len(xb))
-    if n == 0:
-        return 0
-    neq = np.nonzero(xa[:n] != xb[:n])[0]
-    return int(neq[0]) if len(neq) else n
 
 
 def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:

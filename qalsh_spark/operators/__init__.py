@@ -1,17 +1,14 @@
-from qalsh_spark.operators.banding import explode_minhash_bands, explode_simhash_bands
+from qalsh_spark.operators.banding import explode_bands
 from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
 from qalsh_spark.operators.verify import verify_pairs
 from qalsh_spark.operators.components import connected_components
-from qalsh_spark.operators.suffix import substring_candidate_pairs
 from qalsh_spark.operators.drusilla import drusilla_representatives, qalsh_plus_topk
 
 __all__ = [
     "drusilla_representatives",
     "qalsh_plus_topk",
-    "explode_minhash_bands",
-    "explode_simhash_bands",
+    "explode_bands",
     "candidate_pairs_from_buckets",
     "verify_pairs",
     "connected_components",
-    "substring_candidate_pairs",
 ]

@@ -2,7 +2,7 @@
 the direct parity lane with the reference's c-k-ANNS mission
 (/root/reference/methods/qalsh.h:25-32, README.md:5-9).
 
-Three tiers:
+Four lanes:
   1. `brute_force_topk` — exact top-k under cosine / l2 / the reference's
      full l_p family (p in {0.5, 1, 2}, /root/reference/methods/util.h:280-464),
      the analog of the ground-truth linear scan `-alg 0` / `-alg 5`
@@ -15,18 +15,23 @@ Three tiers:
      methods/qalsh.h:118-120), bucket by per-band sign keys, and only score
      candidates that collide in >= 1 band (the collision-count filter,
      methods/qalsh.h:442-447).
-  3. `ivf_topk` — IVF-style: seeded-sample centroids, route each vector to
+  3. `pstable_topk` — the reference's own hash family for l_p, 0 < p <= 2:
+     raw quantized p-stable cells signed once, the collision-count rule,
+     and virtual rehashing (methods/qalsh.h:844-871) as rounds over the
+     same cells; a single pass is round 0.
+  4. `ivf_topk` — IVF-style: seeded-sample centroids, route each vector to
      its nearest centroid, probe the closest `nprobe` cells per query — the
      scale path for 100 TB embedding tables (the analog of QALSH+'s kd-tree
      block ranking, methods/qalsh_plus.h:230-250, 568-598).
 
 Scale discipline:
-  - SRP signing and IVF cell assignment are Arrow-batched pandas UDFs doing
-    one NumPy matmul per batch (same discipline as the document signing
-    stage).  The plane/centroid matrices live in the UDF closure — they are
-    NEVER baked into the plan as literals, and the vector dimension is read
-    from the data at execution time (no driver-side `.first()` probe, no
-    blocking job during plan construction).
+  - SRP / p-stable signing and IVF cell assignment are Arrow-batched
+    pandas UDFs doing one NumPy matmul per batch (same discipline as the
+    document signing stage).  The plane/centroid matrices live in the UDF
+    closure — they are NEVER baked into the plan as literals, and the
+    vector dimension is read from the data at execution time (no
+    driver-side `.first()` probe, no blocking job during plan
+    construction).
   - Cell assignment is per-row math against a broadcast-by-closure matrix:
     ZERO shuffle of the big side (the previous window-over-crossJoin design
     shuffled and sorted n x n_cells rows).
@@ -325,44 +330,18 @@ def lsh_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def pstable_band_keys_udf(
-    m: int, bands: int, rows: int, p: float, w: float, seed: int = 6
-):
-    """Arrow-batched quantized p-stable signing: embedding -> array<long>
-    of per-band keys from cell_i = floor((a_i . x + b_i) / w), a_i drawn
-    from the reference's p-stable family (Gaussian p=2 / Cauchy p=1 / Levy
-    p=0.5, /root/reference/methods/qalsh.h:238-244).  Same closure
-    discipline as the SRP UDF: one BLAS matmul per batch, plane matrix
-    generated lazily from (seed, d) at first batch — no plan literals, no
-    driver-side dimension probe."""
-    assert bands * rows == m, "bands*rows must equal m"
-    offsets = K.pstable_offsets(m, w, seed)
-    state: dict[int, np.ndarray] = {}
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _udf(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype=object)
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        d = X.shape[1]
-        planes = state.get(d)
-        if planes is None:
-            planes = state[d] = K.pstable_planes(m, d, p, seed)
-        keys = K.pstable_band_keys_matrix(X, planes, offsets, w, bands, rows)
-        return pd.Series(list(keys))
-
-    return _udf
-
-
 def pstable_cells_udf(m: int, p: float, w: float, seed: int = 6):
     """Arrow-batched RAW-cell signing: embedding -> array<long> of the m
-    unmixed quantized cells floor((a_i . x + b_i) / w).  Unlike
-    pstable_band_keys_udf the cells stay arithmetic, so the virtual-
-    rehashing loop can double the bucket width r times with a plain
-    `shiftright(cell, r)` on the ALREADY-SIGNED data — no re-projection,
-    no second scan of the raw vectors (the quantized analog of the
-    reference growing its search radius in place over the same B+-tree
-    projections, methods/qalsh.h:844-871)."""
+    unmixed quantized cells floor((a_i . x + b_i) / w), a_i drawn from the
+    reference's p-stable family (Gaussian p=2 / Cauchy p=1 / Levy p=0.5,
+    the reference's methods/qalsh.h:238-244).  One BLAS matmul per batch;
+    the plane matrix is generated lazily from (seed, d) at first batch —
+    no plan literals, no driver-side dimension probe.  The cells stay
+    arithmetic, so the virtual-rehashing loop can double the bucket width
+    r times with a plain `shiftright(cell, r)` on the ALREADY-SIGNED data
+    — no re-projection, no second scan of the raw vectors (the quantized
+    analog of the reference growing its search radius in place over the
+    same B+-tree projections, methods/qalsh.h:844-871)."""
     offsets = K.pstable_offsets(m, w, seed)
     state: dict[int, np.ndarray] = {}
 
@@ -381,33 +360,6 @@ def pstable_cells_udf(m: int, p: float, w: float, seed: int = 6):
     return _udf
 
 
-def pstable_projection_buckets(
-    vectors: DataFrame,
-    m: int = 16,
-    bands: int = 8,
-    p: float = 2.0,
-    w: float = 4.0,
-    seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, band_key) bucket rows from quantized p-stable projections —
-    the l_p-space twin of random_projection_buckets (which is cosine-only
-    SRP).  This is the direct batch reimagination of the reference's
-    projection tables: the sorted B+-tree of raw projections
-    (methods/qalsh.h:285-307) becomes an equality bucket over floor-
-    quantized projections, and the query-anchored sweep becomes a band-key
-    equi-join."""
-    rows = m // bands
-    sig = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        pstable_band_keys_udf(m, bands, rows, p, w, seed)(F.col(vec_col)).alias(
-            "keys"
-        ),
-    )
-    return sig.select("vec_id", F.explode("keys").alias("band_key"))
-
-
 def pstable_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -423,7 +375,7 @@ def pstable_topk(
     vec_col: str = "embedding",
     qid_col: str = "qid",
     qvec_col: str = "qvec",
-    max_rounds: int = 0,
+    max_rounds: int = 1,
     persists: list | None = None,
 ) -> DataFrame:
     """Approximate l_p top-k via quantized p-stable LSH with the reference's
@@ -439,11 +391,6 @@ def pstable_topk(
     (measured on the reference's Mnist: recall .989 at 12% candidates vs
     .94 at 40% for 2-row bands at equal recall budget).
 
-    Plan shape: the (small-by-protocol) query keys broadcast, so the big
-    side is never shuffled for discovery — one map-side equi-join, then a
-    groupBy(qid, vec_id) count (the distributed freq[] counter) over slim
-    collision rows, then rescoring joins for the filtered candidates only.
-
     Bucket width: pass `w` directly (data-scale), or `radius` (target
     near-neighbor distance): w = radius * kernels.pstable_w(c, p), the
     reference's auto-tuned unit-radius width (methods/qalsh.h:197-226)
@@ -453,26 +400,46 @@ def pstable_topk(
     defaults to the reference's alpha*m with alpha from the
     collision-probability midpoint (kernels.pstable_alpha).
 
-    Virtual rehashing (max_rounds > 0): the reference grows the search
-    radius geometrically at query time until top-k is certified
-    (methods/qalsh.h:844-871, stop rule :478-479).  The batch analog here
-    signs BOTH sides once with raw floor cells, then per round r joins on
-    `shiftright(cell, r)` — an exact halving of the grid, i.e. bucket
-    width w * 2^r — for the still-pending queries only (left_anti on
-    satisfied qids, the same escalation shape as the minhash lane in
-    plans/pipeline.py).  A query STOPS with the reference's certificate
-    (methods/qalsh.h:478-479): after exact rescoring of that round's
-    candidates, the k-th best TRUE distance must be <= c * R_r where
-    R_r = radius * 2^r — not merely ">= k candidates seen", which would
-    accept k lucky collisions at a radius far below the true k-NN ball
-    and lose recall (measured: 0.61 vs 0.95+ under the certificate).
-    min_collisions stays FIXED across rounds, as the reference's l_ does:
-    the target radius doubles WITH the width, so the collision
-    probability at the round-r radius under the round-r width is
-    unchanged.  Queries still short at the max_rounds cap return their
-    best-so-far.  max_rounds=0 (default) preserves the single-pass
-    behavior.  `persists` (rehash path only) collects the per-round
-    materializations for the caller to unpersist."""
+    One code path, the reference's: project once, then widen the search
+    radius in place (methods/qalsh.h:844-871, stop rule :478-479).  Both
+    sides are signed ONCE with raw floor cells (pstable_cells_udf); round
+    r joins on `(j, shiftright(cell, r))` — an exact halving of the grid,
+    i.e. bucket width w * 2^r — so no round re-projects or re-scans the
+    raw vectors.  Round 0 runs over every query; round r > 0 only over
+    the still-pending ones (left_anti on satisfied qids, the same
+    escalation shape as the minhash lane in plans/pipeline.py).  A query
+    STOPS with the reference's certificate (methods/qalsh.h:478-479):
+    after exact rescoring of that round's candidates, the k-th best TRUE
+    distance must be <= c * R_r where R_r = radius * 2^r — not merely
+    ">= k candidates seen", which would accept k lucky collisions at a
+    radius far below the true k-NN ball and lose recall (measured: 0.61
+    vs 0.95+ under the certificate).  min_collisions stays FIXED across
+    rounds, as the reference's l_ does: the target radius doubles WITH
+    the width, so the collision probability at the round-r radius under
+    the round-r width is unchanged.  Queries still short at the last
+    round return its best-so-far.  `max_rounds` caps the rounds; 0 and 1
+    both mean one round, the single pass at width `w`.
+
+    Plan shape per round: the (small-by-protocol) query cells broadcast,
+    so the big side is never shuffled for discovery — one map-side
+    equi-join, then a groupBy(qid, vec_id) count (the distributed freq[]
+    counter) over slim collision rows, then rescoring joins for the
+    filtered candidates only.
+
+    Only work BETWEEN rounds materializes anything: with more than one
+    round, the exploded vector cells (read by every round), each
+    non-final round's top-k (read by the certificate filter, the result
+    union and the next pending set) and each pending set are persisted
+    serialized (PySpark's MEMORY_AND_DISK), and each pending set is
+    counted once for loop control — the only per-round driver value, so
+    a 10^5-query batch never embeds qid literals in the plan or collects
+    per-query rows (tests/test_pstable.py::test_pstable_rehash_10k_queries).
+    A one-round call persists nothing and, when `m` is given, builds its
+    plan without running a Spark job.  Every persisted frame is appended
+    to `persists` for caller-side unpersist once the result is
+    materialized."""
+    from pyspark import StorageLevel
+
     if w is None:
         if radius is None:
             raise ValueError("pstable_topk: pass w or radius")
@@ -490,102 +457,23 @@ def pstable_topk(
             min_collisions = max(1, int(np.ceil(K.pstable_alpha(p, w / radius, c) * m)))
         else:
             min_collisions = max(1, m // 2)
-    if max_rounds > 0:
-        return _pstable_rehash_topk(
-            vectors, queries, k, p, w, c, radius, m, min_collisions, seed,
-            id_col, vec_col, qid_col, qvec_col, max_rounds, persists,
-        )
-    # one key per projection (bands=m, rows=1): the count is over single
-    # projections exactly as the reference's per-tree sweep counts
-    vb = pstable_projection_buckets(vectors, m, m, p, w, seed, id_col, vec_col)
-    qb = pstable_projection_buckets(
-        queries, m, m, p, w, seed, qid_col, qvec_col
-    ).withColumnRenamed("vec_id", "qid")
-    cand = (
-        vb.join(F.broadcast(qb), on="band_key")
-        .groupBy("qid", "vec_id")
-        .count()
-        .filter(F.col("count") >= min_collisions)
-        .select("qid", "vec_id")
-    )
-    scored = (
-        cand.join(vectors.select(F.col(id_col).alias("vec_id"), vec_col), on="vec_id")
-        .join(queries.select(F.col(qid_col).alias("qid"), qvec_col), on="qid")
-        .select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            lp_dist(F.col(qvec_col), F.col(vec_col), float(p)).alias("score"),
-        )
-    )
-    w_rank = Window.partitionBy("qid").orderBy(F.asc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _pstable_rehash_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    p: float,
-    w: float,
-    c: float,
-    radius: float | None,
-    m: int,
-    min_collisions: int,
-    seed: int,
-    id_col: str,
-    vec_col: str,
-    qid_col: str,
-    qvec_col: str,
-    max_rounds: int,
-    persists: list | None,
-) -> DataFrame:
-    """Virtual-rehashing search loop (see pstable_topk docstring).
-
-    Both sides are signed ONCE with raw floor cells; round r's bucket is
-    `shiftright(cell, r)` — exact floor division by 2^r, i.e. the same
-    grid at width w * 2^r — so no round ever re-projects or re-scans the
-    raw vectors for signing: the exploded vector cells are persisted
-    serialized (PySpark's MEMORY_AND_DISK) before the loop, and every
-    round's discovery join reads that one materialization.  Plan shape
-    per round: the pending query cells broadcast (queries are small by
-    protocol, and shrink each round), the big side is touched map-side
-    only, the lone wide exchange is the groupBy(qid, vec_id) collision
-    counter over slim collision rows, and exact rescoring touches the
-    filtered candidates only.  The per-round top-k frame is persisted
-    because it has three consumers — the certificate filter, the result
-    union, and the next round's pending derivation.
-
-    NO driver-side per-query state: the pending set is a DataFrame (one
-    qid per row, persisted + eagerly counted for loop control — the same
-    shape as the minhash escalation in plans/pipeline.py), certification
-    is a distributed filter over the per-round top-k, and the next
-    round's pending set is a left_anti join.  The only per-round driver
-    value is the scalar pending count, so a 10^5-query batch never
-    embeds qid literals in the plan or collects per-query rows
-    (tests/test_pstable.py::test_pstable_rehash_10k_queries).
-
-    Stop rule per query (reference methods/qalsh.h:478-479): certified at
-    round r iff it has >= k exactly-scored candidates AND the k-th best
-    true distance <= c * R_r, R_r = radius * 2^r; the emitted top-k rows
-    are that round's.  Uncertified queries at the cap emit best-so-far.
-
-    Every frame this loop persists (vector cells, per-round top-k,
-    per-round pending sets) is appended to `persists` for caller-side
-    unpersist once the result is materialized."""
-    from pyspark import StorageLevel
-
     if radius is None:
         radius = w / K.pstable_w(c, p)
+    rounds = max(1, max_rounds)
+
+    def keep(df: DataFrame) -> DataFrame:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        if persists is not None:
+            persists.append(df)
+        return df
+
     sign = pstable_cells_udf(m, p, w, seed)
     vcells = vectors.select(
         F.col(id_col).alias("vec_id"),
         F.posexplode(sign(F.col(vec_col))).alias("j", "cell"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if persists is not None:
-        persists.append(vcells)
+    )
+    if rounds > 1:
+        vcells = keep(vcells)
     qcells = queries.select(
         F.col(qid_col).alias("qid"),
         F.posexplode(sign(F.col(qvec_col))).alias("j", "qcell"),
@@ -593,21 +481,11 @@ def _pstable_rehash_topk(
     vpts = vectors.select(F.col(id_col).alias("vec_id"), vec_col)
     qpts = queries.select(F.col(qid_col).alias("qid"), qvec_col)
     w_rank = Window.partitionBy("qid").orderBy(F.asc("score"), F.asc("neighbor_id"))
-    pending = (
-        queries.select(F.col(qid_col).alias("qid"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if persists is not None:
-        persists.append(pending)
-    n_pending = pending.count()
-    taken = []
-    for r in range(max_rounds):
-        if n_pending == 0:
-            break
-        qk = qcells.join(F.broadcast(pending), on="qid").select(
-            "qid", "j", F.shiftright("qcell", r).alias("cellr")
-        )
+    pending = None  # round 0 runs over every query
+    out = None
+    for r in range(rounds):
+        qk = qcells if pending is None else qcells.join(F.broadcast(pending), on="qid")
+        qk = qk.select("qid", "j", F.shiftright("qcell", r).alias("cellr"))
         cand_r = (
             vcells.select("vec_id", "j", F.shiftright("cell", r).alias("cellr"))
             .join(F.broadcast(qk), on=["j", "cellr"])
@@ -626,45 +504,32 @@ def _pstable_rehash_topk(
             )
             .withColumn("rank", F.row_number().over(w_rank))
             .filter(F.col("rank") <= k)
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if persists is not None:
-            persists.append(topk_r)
-        if r == max_rounds - 1:
-            # cap reached: every still-pending query emits best-so-far
+        if r == rounds - 1:
+            # last round: every still-pending query emits best-so-far
             # (topk_r is already restricted to pending qids by the qk join)
-            taken.append(topk_r)
+            taken = topk_r
+        else:
+            topk_r = keep(topk_r)
+            # the reference's certificate (methods/qalsh.h:478-479) as a
+            # distributed filter: >= k exact candidates AND kth <= c * R_r
+            cert_r = c * radius * (2.0**r)
+            done_q = (
+                topk_r.groupBy("qid")
+                .agg(F.count("*").alias("n"), F.max("score").alias("kth"))
+                .filter((F.col("n") >= k) & (F.col("kth") <= F.lit(float(cert_r))))
+                .select("qid")
+            )
+            taken = topk_r.join(F.broadcast(done_q), on="qid", how="left_semi")
+            if pending is None:
+                pending = queries.select(F.col(qid_col).alias("qid")).distinct()
+            pending = keep(pending.join(done_q, on="qid", how="left_anti"))
+        out = taken if out is None else out.unionByName(taken)
+        # loop control: ONE scalar action per round boundary (also
+        # populates this round's topk cache, which done_q and the result
+        # union re-read)
+        if r < rounds - 1 and pending.count() == 0:
             break
-        # the reference's certificate (methods/qalsh.h:478-479) as a
-        # distributed filter: >= k exact candidates AND kth <= c * R_r
-        cert_r = c * radius * (2.0**r)
-        done_q = (
-            topk_r.groupBy("qid")
-            .agg(F.count("*").alias("n"), F.max("score").alias("kth"))
-            .filter((F.col("n") >= k) & (F.col("kth") <= F.lit(float(cert_r))))
-            .select("qid")
-        )
-        taken.append(topk_r.join(F.broadcast(done_q), on="qid", how="left_semi"))
-        pending = pending.join(done_q, on="qid", how="left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        if persists is not None:
-            persists.append(pending)
-        # loop control: ONE scalar action per round (also populates this
-        # round's topk cache, which done_q and the result union re-read)
-        n_pending = pending.count()
-    if not taken:
-        # no queries at all: empty frame with the result schema
-        return (
-            queries.select(F.col(qid_col).alias("qid"))
-            .limit(0)
-            .crossJoin(vectors.select(F.col(id_col).alias("neighbor_id")).limit(0))
-            .withColumn("score", F.lit(0.0))
-            .withColumn("rank", F.lit(1))
-        )
-    out = taken[0]
-    for t in taken[1:]:
-        out = out.unionByName(t)
     return out
 
 

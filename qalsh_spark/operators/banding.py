@@ -18,6 +18,8 @@ posexplode/transform are JVM-side (whole-stage codegen) — no Python here.
 
 from __future__ import annotations
 
+from collections.abc import Collection
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -29,7 +31,30 @@ from qalsh_spark import kernels as K
 # lane tags (byte-sized) shared by pair generation / verification
 LANE_MINHASH = 0
 LANE_SIMHASH = 1
+# Exact-substring lane ("distributed suffix-array pass").  A true suffix
+# array is one giant sorted structure — the reference's closest relative is
+# the bulkload-sorted projection table + sibling-linked leaf sweep
+# (the reference's methods/qalsh.h:285-307, 622-828: sort once, then walk
+# neighbors in order).  The scalable reimagination, all in the one signing
+# pass (functions/signatures.py) plus the shared bucket stream:
+#   1. per document, sample suffix start positions at CONTENT-DEFINED
+#      anchors (rolling hash of the preceding 16 bytes == 0 mod gap,
+#      winnowing-style): two documents sharing a >= run_min verbatim run
+#      place anchors at the same content offsets inside the run, so they
+#      emit comparable suffixes without any global alignment;
+#   2. hash the `lcp_min` bytes after each anchor into an int64 bucket key
+#      (kernels.suffix_key_pairs_for_text).  LCP >= lcp_min IFF the first
+#      lcp_min bytes are equal IFF the keys are equal, so equality bucketing
+#      IS the LCP verification and the lane shuffles only (doc_id, key)
+#      int64 pairs, never suffix strings;
+#   3. generate (doc_a, doc_b) edges per bucket with the generic skew-safe
+#      pair operator (operators/pairs.py: bounded JVM all-pairs for small
+#      buckets, star-to-hub for hot boilerplate runs) under its own cap.
+# No global orderBy, no single-partition window, no unbounded collect: the
+# lane is groupBy-shaped, AQE/skew-safe, and shuffles ~16 bytes per sampled
+# anchor regardless of document size.
 LANE_SUFFIX = 2
+SUFFIX_BUCKET_CAP = 32
 LANE_EMBED = 3  # SRP buckets over embeddings (operators/dedup.py)
 LANE_NAMES = {
     LANE_MINHASH: "minhash",
@@ -76,36 +101,28 @@ def reband_minhash_udf(bands: int, rows: int):
     return _udf
 
 
-def explode_minhash_bands(signatures: DataFrame) -> DataFrame:
-    return signatures.select(
-        "doc_id", F.explode(_lane("band_keys", LANE_MINHASH)).alias("band")
-    ).select("doc_id", "band.lane_id", "band.band_key")
+# lane name -> (lane tag, signatures column), in bucket-stream order
+_LANE_COLUMNS = {
+    "minhash": (LANE_MINHASH, "band_keys"),
+    "simhash": (LANE_SIMHASH, "simhash_keys"),
+    "suffix": (LANE_SUFFIX, "suffix_keys"),
+}
 
 
-def explode_simhash_bands(signatures: DataFrame) -> DataFrame:
-    """SimHash block-combination keys (kernels.simhash_band_keys): docs at
-    Hamming distance <= blocks-key_blocks share >=1 key."""
-    return signatures.select(
-        "doc_id", F.explode(_lane("simhash_keys", LANE_SIMHASH)).alias("band")
-    ).select("doc_id", "band.lane_id", "band.band_key")
+def explode_bands(signatures: DataFrame, lanes: Collection[str]) -> DataFrame:
+    """Bucket rows (doc_id, lane_id, band_key) for the named `lanes`
+    (minhash band keys; simhash block-combination keys, kernels.
+    simhash_band_keys — docs at Hamming distance <= blocks-key_blocks
+    share >=1 key; suffix anchor keys) in ONE scan of the signatures
+    table, always in the order minhash, simhash, suffix.
 
-
-def explode_all_bands(
-    signatures: DataFrame,
-    include_simhash: bool = True,
-    include_suffix: bool = False,
-) -> DataFrame:
-    """All lanes in ONE scan of the signatures table.
-
-    A self-union of the per-lane selects would defeat Spark's
-    cache/exchange reuse (plan canonicalization misses across union branches —
-    measured ~50x recompute cost), so the lanes are concatenated per-row into
-    one array<struct> and exploded JVM-side."""
-    parts = [_lane("band_keys", LANE_MINHASH)]
-    if include_simhash:
-        parts.append(_lane("simhash_keys", LANE_SIMHASH))
-    if include_suffix:
-        parts.append(_lane("suffix_keys", LANE_SUFFIX))
+    A self-union of per-lane selects would defeat Spark's cache/exchange
+    reuse (plan canonicalization misses across union branches — measured
+    ~50x recompute cost), so the lanes are concatenated per-row into one
+    array<struct> and exploded JVM-side."""
+    parts = [
+        _lane(col, lid) for name, (lid, col) in _LANE_COLUMNS.items() if name in lanes
+    ]
     combined = F.concat(*parts) if len(parts) > 1 else parts[0]
     return signatures.select(
         "doc_id", F.explode(combined).alias("band")

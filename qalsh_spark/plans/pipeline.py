@@ -29,13 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.functions.signatures import sign_documents, with_doc_id
-from qalsh_spark.operators.banding import explode_all_bands
+from qalsh_spark.operators.banding import SUFFIX_BUCKET_CAP, explode_bands
 from qalsh_spark.operators.components import (
     clusters_with_representatives,
     connected_components,
 )
 from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
-from qalsh_spark.operators.suffix import SUFFIX_BUCKET_CAP
 from qalsh_spark.operators.verify import verify_pairs
 from qalsh_spark.sources.catalog import StageCatalog
 
@@ -98,11 +97,12 @@ class DedupPipeline:
         return sign_documents(documents, self.cfg, rows_hint=self.rows_hint)
 
     def buckets(self, signatures: DataFrame) -> DataFrame:
-        return explode_all_bands(
-            signatures,
-            include_simhash=self.enable_simhash,
-            include_suffix=self.enable_suffix,
-        )
+        lanes = ["minhash"]
+        if self.enable_simhash:
+            lanes.append("simhash")
+        if self.enable_suffix:
+            lanes.append("suffix")
+        return explode_bands(signatures, lanes)
 
     def candidate_pairs(
         self, signatures: DataFrame, persists: list | None = None

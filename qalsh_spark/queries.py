@@ -1121,11 +1121,11 @@ def q_minhash_signatures(spark, sf_dir):
 def q_simhash_hamming_pairs(spark, sf_dir):
     """JVM-only Hamming verify over simhash band candidates."""
     from qalsh_spark.functions.signatures import sign_documents
-    from qalsh_spark.operators.banding import explode_simhash_bands
+    from qalsh_spark.operators.banding import explode_bands
     from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
 
     sig = sign_documents(_adapted_docs(spark, sf_dir), DedupConfig())
-    pairs, _ = candidate_pairs_from_buckets(explode_simhash_bands(sig), 64)
+    pairs, _ = candidate_pairs_from_buckets(explode_bands(sig, ["simhash"]), 64)
     fp = sig.select("doc_id", "simhash")
     return (
         pairs.join(fp.withColumnsRenamed({"doc_id": "a", "simhash": "fa"}), on="a")
@@ -1137,11 +1137,22 @@ def q_simhash_hamming_pairs(spark, sf_dir):
 
 
 def q_substring_pairs(spark, sf_dir):
-    from qalsh_spark.operators.suffix import substring_candidate_pairs
-    from qalsh_spark.functions.signatures import with_doc_id
+    """Suffix-lane pairs from the signing pass's anchor keys, paired under
+    the suffix cap — the same signing and bucket path the pipeline runs.
+    Pairs are pre-verified by construction (equal key => LCP >= lcp_min)."""
+    from qalsh_spark.functions.signatures import sign_documents
+    from qalsh_spark.operators.banding import (
+        SUFFIX_BUCKET_CAP,
+        explode_bands,
+        lane_name_col,
+    )
+    from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
 
-    docs = with_doc_id(_adapted_docs(spark, sf_dir))
-    return substring_candidate_pairs(docs, DedupConfig())
+    sig = sign_documents(_adapted_docs(spark, sf_dir), DedupConfig())
+    pairs, _ = candidate_pairs_from_buckets(
+        explode_bands(sig, ["suffix"]), SUFFIX_BUCKET_CAP
+    )
+    return pairs.select("a", "b", lane_name_col(F.col("lane_id")).alias("lane"))
 
 
 def q_lsh_ann_topk(spark, sf_dir):
@@ -1219,7 +1230,7 @@ def q_pstable_ann_topk(spark, sf_dir):
 
 def q_pstable_rehash_ann_topk(spark, sf_dir):
     """Golden-oracle checked: the p-stable lane's VIRTUAL-REHASHING loop
-    (operators/ann.py _pstable_rehash_topk — the reference's geometric
+    (operators/ann.pstable_topk at max_rounds=6 — the reference's geometric
     radius growth + kth <= c*R stop rule, methods/qalsh.h:844-871 and
     478-479) started at w0 = 0.8, a quarter of the single-pass lane's
     width, so the early rounds genuinely under-fill and the loop runs.

@@ -232,7 +232,7 @@ def build(sf_dir: str, cfg: DedupConfig):
 
     # suffix lane: q_substring_pairs = cap-32 bucket pairs (pre-verified by
     # key equality), lane tag 'suffix'
-    from qalsh_spark.operators.suffix import SUFFIX_BUCKET_CAP
+    from qalsh_spark.operators.banding import SUFFIX_BUCKET_CAP
 
     suf_pairs = sorted(pairs_with_cap(suf_buckets, SUFFIX_BUCKET_CAP))
 
@@ -327,9 +327,10 @@ def build_ann_lanes(sf_dir: str) -> dict[str, pa.Table]:
     q_ann_recall_eval — single-process replays of the exact operator
     compositions in operators/ann.py / operators/drusilla.py, sharing the
     same qalsh_spark.kernels calls the Arrow UDFs make (planes, quantized
-    keys, Drusilla selection), with the JVM rescoring fold replicated by
-    `_fold_rows`.  Query protocol is the queries.py one: queries = vec_id
-    < 10, k = 5 (100 for the recall sweep's approx input)."""
+    keys and cells, Drusilla selection), with the JVM rescoring fold
+    replicated by `_fold_rows`.  Query protocol is the queries.py one:
+    queries = vec_id < 10, k = 5 (100 for the recall sweep's approx
+    input)."""
     from collections import defaultdict
 
     fp, ids, emb32 = embeddings_fp(sf_dir)
@@ -367,18 +368,48 @@ def build_ann_lanes(sf_dir: str) -> dict[str, pa.Table]:
         fp, topk_rows(lsh_cand, _cos_spark64, 5, desc=True), "cos"
     )
 
-    # --- pstable_ann_topk: Gaussian p=2, w=3.2, m=32 single-row bands,
-    # collision count >= 16 (the reference's freq>l rule), exact l2 rescore
-    pplanes = K.pstable_planes(32, d, 2.0, 6)
-    poffs = K.pstable_offsets(32, 3.2, 6)
-    pkeys = K.pstable_band_keys_matrix(X, pplanes, poffs, 3.2, 32, 1)
-    ps_cand = {}
-    for qi in qsel:
-        coll = (pkeys == pkeys[qi][None, :]).sum(axis=1)
-        ps_cand[int(ids[qi])] = set(np.nonzero(coll >= 16)[0].tolist())
-    out["pstable_ann_topk"] = _ann_table(
-        fp, topk_rows(ps_cand, _l2_spark64, 5, desc=False), "l2"
-    )
+    def pstable_rows(w, m, l, max_r=1, c=2.0):
+        """operators/ann.pstable_topk (p=2, seed 6) in frozen NumPy form:
+        raw floor cells once, arithmetic >> r per round, candidates =
+        (j, cell) collision count >= l, exact l2 rescoring, certificate
+        kth <= c * radius * 2^r with radius = w / pstable_w(c, 2) — the
+        reference's geometric radius growth + stop rule (methods/qalsh.h:
+        844-871, 478-479).  The last round emits best-so-far, so
+        max_r=1 is the single pass."""
+        cells = K.pstable_cells_matrix(
+            X, K.pstable_planes(m, d, 2.0, 6), K.pstable_offsets(m, w, 6), w
+        )
+        radius0 = w / K.pstable_w(c, 2.0)
+        pending_rows = [int(qi) for qi in qsel]
+        rows: list[tuple] = []
+        for rr in range(max_r):
+            if not pending_rows:
+                break
+            shifted = cells >> rr
+            cert = c * radius0 * (2.0**rr)
+            still = []
+            for qi in pending_rows:
+                coll = (shifted == shifted[qi][None, :]).sum(axis=1)
+                cidx = np.nonzero(coll >= l)[0]
+                scored = (
+                    _rank_topk(ids[cidx], _l2_spark64(X[qi], X[cidx]), 5, desc=False)
+                    if len(cidx)
+                    else []
+                )
+                certified = len(scored) >= 5 and scored[-1][1] <= cert
+                if certified or rr == max_r - 1:
+                    rows.extend(
+                        (int(ids[qi]), nid, _spark_round(s, 3), rk)
+                        for nid, s, rk in scored
+                    )
+                else:
+                    still.append(qi)
+            pending_rows = still
+        return rows
+
+    # --- pstable_ann_topk: Gaussian p=2, w=3.2, m=32, collision count
+    # >= 16 (the reference's freq>l rule), one round
+    out["pstable_ann_topk"] = _ann_table(fp, pstable_rows(3.2, 32, 16), "l2")
 
     # --- pstable_auto_ann_topk: the FULLY auto-tuned p-stable lane —
     # (c=2, p=2, radius=1.2) only; w = radius * pstable_w, m from the
@@ -390,57 +421,14 @@ def build_ann_lanes(sf_dir: str) -> dict[str, pa.Table]:
     w_a = float(radius_a) * K.pstable_w(c_a, p_a)
     m_a = K.pstable_m(c_a, p_a, n, w=w_a / radius_a)
     l_a = max(1, int(np.ceil(K.pstable_alpha(p_a, w_a / radius_a, c_a) * m_a)))
-    aplanes = K.pstable_planes(m_a, d, p_a, 6)
-    aoffs = K.pstable_offsets(m_a, w_a, 6)
-    akeys = K.pstable_band_keys_matrix(X, aplanes, aoffs, w_a, m_a, 1)
-    auto_cand = {}
-    for qi in qsel:
-        coll = (akeys == akeys[qi][None, :]).sum(axis=1)
-        auto_cand[int(ids[qi])] = set(np.nonzero(coll >= l_a)[0].tolist())
-    out["pstable_auto_ann_topk"] = _ann_table(
-        fp, topk_rows(auto_cand, _l2_spark64, 5, desc=False), "l2"
-    )
+    out["pstable_auto_ann_topk"] = _ann_table(fp, pstable_rows(w_a, m_a, l_a), "l2")
 
-    # --- pstable_rehash_ann_topk: the virtual-rehashing lane
-    # (operators/ann.py _pstable_rehash_topk) at a deliberately small
+    # --- pstable_rehash_ann_topk: the same lane at a deliberately small
     # w0 = 0.8 (1/4 of the single-pass lane's 3.2, so the first rounds
-    # under-fill and the loop is actually exercised).  Raw floor cells
-    # once, arithmetic >> r per round, candidates = collision count >= 16,
-    # exact l2 rescoring, certificate kth <= c * radius * 2^r
-    # (c=2, radius = w0 / pstable_w), max 6 rounds — the reference's
-    # geometric radius growth + stop rule (methods/qalsh.h:844-871,
-    # 478-479) in frozen NumPy form.
-    w0, m_r, l_r, c_r, max_r = 0.8, 32, 16, 2.0, 6
-    rplanes = K.pstable_planes(m_r, d, 2.0, 6)
-    roffs = K.pstable_offsets(m_r, w0, 6)
-    rcells = K.pstable_cells_matrix(X, rplanes, roffs, w0)
-    radius0 = w0 / K.pstable_w(c_r, 2.0)
-    pending_rows = [int(qi) for qi in qsel]
-    rh_rows: list[tuple] = []
-    for rr in range(max_r):
-        if not pending_rows:
-            break
-        shifted = rcells >> rr
-        cert = c_r * radius0 * (2.0**rr)
-        still = []
-        for qi in pending_rows:
-            coll = (shifted == shifted[qi][None, :]).sum(axis=1)
-            cidx = np.nonzero(coll >= l_r)[0]
-            scored = (
-                _rank_topk(ids[cidx], _l2_spark64(X[qi], X[cidx]), 5, desc=False)
-                if len(cidx)
-                else []
-            )
-            certified = len(scored) >= 5 and scored[-1][1] <= cert
-            if certified or rr == max_r - 1:
-                rh_rows.extend(
-                    (int(ids[qi]), nid, _spark_round(s, 3), rk)
-                    for nid, s, rk in scored
-                )
-            else:
-                still.append(qi)
-        pending_rows = still
-    out["pstable_rehash_ann_topk"] = _ann_table(fp, rh_rows, "l2")
+    # under-fill and the loop is actually exercised), max 6 rounds
+    out["pstable_rehash_ann_topk"] = _ann_table(
+        fp, pstable_rows(0.8, 32, 16, max_r=6), "l2"
+    )
 
     # --- ivf_ann_topk: seeded-sample centroids (first-1024-by-id sample,
     # rng(6) choice), nearest-cell assign, nprobe=4, cosine rescore

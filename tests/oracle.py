@@ -124,7 +124,7 @@ def run_oracle(
             for m in ms[1:]:
                 pairs.add((hub, m, lane))
 
-    # --- suffix lane (operators/suffix.py parity) ----------------------
+    # --- suffix lane (operators/banding.LANE_SUFFIX parity) -------------
     # Bucket key = k1 hash of the lcp_min bytes after each content-defined
     # anchor; edge acceptance later requires the full (k1, k2) tuple to
     # match (128-bit test, kernels.suffix_key_pairs_for_text).
@@ -138,7 +138,7 @@ def run_oracle(
             suffix_tuples[d] = set(zip(k1s.tolist(), k2s.tolist()))
             for k in k1s:
                 sbuckets[int(k)].add(d)
-        from qalsh_spark.operators.suffix import SUFFIX_BUCKET_CAP
+        from qalsh_spark.operators.banding import SUFFIX_BUCKET_CAP
 
         for _key, dset in sbuckets.items():
             ds = sorted(dset)

@@ -3,6 +3,8 @@ units + property-style checks, no Spark needed)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -98,25 +100,55 @@ def test_simhash_band_keys_pigeonhole():
 
 def test_anchors_content_defined():
     run = "x" * 50 + " the shared verbatim canonical passage of considerable length repeated across documents " * 4
-    doc_a = "prefix one two three " + run + " suffix alpha"
-    doc_b = "completely different beginning text here " + run + " other ending"
-    sa = set(K.suffixes_for_text(doc_a))
-    sb = set(K.suffixes_for_text(doc_b))
+    prefix_a = "prefix one two three "
+    prefix_b = "completely different beginning text here "
+    doc_a = prefix_a + run + " suffix alpha"
+    doc_b = prefix_b + run + " other ending"
+    # anchors depend only on the preceding window, so inside the shared run
+    # both docs anchor at the same offsets relative to the run's start
+    inner = lambda doc, start: {
+        int(p) - start for p in K.anchors(doc) if start + 16 <= p <= start + len(run)
+    }
+    ia, ib = inner(doc_a, len(prefix_a)), inner(doc_b, len(prefix_b))
+    assert ia and ia == ib
     # content-defined anchors inside the shared run yield shared suffix prefixes
-    shared = {s[:64] for s in sa} & {s[:64] for s in sb}
-    assert shared, "shared verbatim run must produce shared suffix buckets"
+    sa = {doc_a[p : p + 64] for p in K.anchors(doc_a)}
+    sb = {doc_b[p : p + 64] for p in K.anchors(doc_b)}
+    assert sa & sb, "shared verbatim run must produce shared suffix buckets"
+
+
+def _suffix_key_at(text: str, p: int, window: int = 16, lcp_min: int = 100):
+    """The (k1, k2) key of the suffix at anchor `p`: the slice keeps the
+    anchor's window and exactly lcp_min bytes after it, so it is the only
+    anchor of the slice with enough bytes left to be keyed."""
+    k1, k2 = K.suffix_key_pairs_for_text(text[p - window : p + lcp_min])
+    assert len(k1) == 1
+    return int(k1[0]), int(k2[0])
 
 
 def test_lcp():
-    assert K.lcp("abcdef", "abcxyz") == 3
-    assert K.lcp("", "abc") == 0
-    assert K.lcp("same", "same") == 4
+    """Two suffixes get the same key iff their longest common prefix is at
+    least lcp_min bytes."""
+    run = "x" * 50 + " the shared verbatim canonical passage of considerable length repeated across documents " * 4
+    doc_a = run + " suffix alpha and a long distinct tail " * 4
+    doc_b = run + " other ending with its own unrelated tail " * 4
+    outcomes = set()
+    for p in K.anchors(doc_a).tolist():
+        if p > len(run) or p + 100 > min(len(doc_a), len(doc_b)):
+            continue
+        lcp = len(os.path.commonprefix([doc_a[p:], doc_b[p:]]))
+        same = _suffix_key_at(doc_a, p) == _suffix_key_at(doc_b, p)
+        assert same == (lcp >= 100), (p, lcp)
+        outcomes.add(same)
+    assert outcomes == {True, False}
 
 
 def test_suffix_keys_shared_run():
-    """Docs sharing a >=200-char verbatim run must share >=1 suffix key
-    (key = hash of lcp_min bytes after a content-defined anchor), and docs
-    with unrelated text must share none."""
+    """Docs sharing a >=200-char verbatim run place content-defined anchors
+    at the same offsets inside it and so share >=1 full (k1, k2) tuple
+    (k1 = hash of the lcp_min bytes after an anchor, k2 = the independent
+    check hash); docs with unrelated text share none; empty or tiny text
+    yields empty, aligned arrays."""
     run = (
         "x" * 50
         + " the shared verbatim canonical passage of considerable length "
@@ -125,14 +157,16 @@ def test_suffix_keys_shared_run():
     doc_a = "prefix one two three " + run + " suffix alpha"
     doc_b = "completely different beginning text here " + run + " other ending"
     doc_c = "nothing in common with the others at all just filler words " * 10
-    ka = set(K.suffix_keys_for_text(doc_a).tolist())
-    kb = set(K.suffix_keys_for_text(doc_b).tolist())
-    kc = set(K.suffix_keys_for_text(doc_c).tolist())
-    assert ka & kb, "shared verbatim run must produce shared suffix keys"
-    assert not (ka & kc) and not (kb & kc)
-    # short docs / empty docs yield no keys, no crash
-    assert len(K.suffix_keys_for_text("")) == 0
-    assert len(K.suffix_keys_for_text("tiny")) == 0
+    ta, tb, tc = (
+        set(zip(*(k.tolist() for k in K.suffix_key_pairs_for_text(d))))
+        for d in (doc_a, doc_b, doc_c)
+    )
+    assert ta & tb, "shared verbatim run must produce shared (k1, k2) tuples"
+    assert not (ta & tc) and not (tb & tc)
+    for text in ("", "tiny"):
+        k1, k2 = K.suffix_key_pairs_for_text(text)
+        assert len(k1) == len(k2) == 0
+        assert k1.dtype == k2.dtype == np.int64
 
 
 def test_doc_id_from_url_known_value():

@@ -1,20 +1,23 @@
 """p-stable l_p approximate lane (VERDICT r2 task 2): quantized Gaussian /
 Cauchy / Levy projections with the reference's collision-count candidate
-rule, evaluated on the reference's own Mnist artifacts — recall floors
-against the SHIPPED ground truth for l2, against the (bit-exact-validated)
-numpy reproduction for l1.
+rule.  Kernel parity, the tuning formulas, the plan shape and the
+one-round contract run on synthetic `datagen.generate_embeddings` data;
+the recall floors run on the reference's own Mnist artifacts when they
+are present — against the SHIPPED ground truth for l2, against the
+(bit-exact-validated) numpy reproduction elsewhere.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import uuid
 
 import numpy as np
 import pytest
 
-import pyspark.sql.functions as F
-
 from qalsh_spark import kernels as K
+from qalsh_spark.datagen import generate_embeddings
 from qalsh_spark.sources.refdata import (
     ground_truth_numpy,
     load_reference_set,
@@ -23,41 +26,96 @@ from qalsh_spark.sources.refdata import (
 
 MNIST = "/root/reference/data/Mnist/Mnist"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(MNIST + ".ds"), reason="reference Mnist data not present"
-)
-
 
 @pytest.fixture(scope="module")
 def mnist():
+    if not os.path.exists(MNIST + ".ds"):
+        pytest.skip("reference Mnist data not present")
     return load_reference_set(MNIST, p=2.0)
 
 
+def _embedding_frames(spark, n: int = 1000, nq: int = 3):
+    """(vectors, queries) from the planted-cluster generator: n data
+    vectors plus nq held-out queries, d = 64, unit-norm."""
+    X = generate_embeddings(n + nq, d=64, seed=11).X
+    vec = spark.createDataFrame(points_to_pandas(X[:n]))
+    q = spark.createDataFrame(points_to_pandas(X[n:], "qid", "qvec"))
+    return vec, q
+
+
+def _exchange_keys(plan: str) -> list[str]:
+    """Column names of every hash-partitioning exchange in a plan string."""
+    return [
+        name
+        for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+        for name in re.findall(r"(\w+)#\d+", keys)
+    ]
+
+
+def _assert_discovery_broadcast(plan: str) -> None:
+    """The query-cell join broadcasts and the big side is never
+    hash-exchanged on its cell keys for discovery."""
+    assert "BroadcastHashJoin" in plan, plan
+    keys = _exchange_keys(plan)
+    assert not {"j", "cell", "cellr"} & set(keys), keys
+
+
 def test_pstable_kernel_deterministic_and_udf_parity(spark):
-    """The Arrow UDF must produce byte-identical keys to the NumPy kernel
-    (same closure-lazy plane generation discipline as SRP)."""
-    from qalsh_spark.operators.ann import pstable_band_keys_udf
+    """The Arrow UDF must produce byte-identical raw cells to the NumPy
+    kernel (same closure-lazy plane generation discipline as SRP)."""
+    from qalsh_spark.operators.ann import pstable_cells_udf
 
     rng = np.random.default_rng(1)
     X = rng.standard_normal((40, 12))
     m, w, p = 8, 2.5, 2.0
     planes = K.pstable_planes(m, 12, p, 6)
     offs = K.pstable_offsets(m, w, 6)
-    want = K.pstable_band_keys_matrix(X, planes, offs, w, m, 1)
+    want = K.pstable_cells_matrix(X, planes, offs, w)
     df = spark.createDataFrame(
         [(i, [float(v) for v in X[i]]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
     got = (
-        df.select("vec_id", pstable_band_keys_udf(m, m, 1, p, w, 6)("embedding").alias("k"))
+        df.select("vec_id", pstable_cells_udf(m, p, w, 6)("embedding").alias("c"))
         .orderBy("vec_id")
         .collect()
     )
-    assert np.array_equal(np.array([r["k"] for r in got]), want)
+    assert np.array_equal(np.array([r["c"] for r in got]), want)
     # determinism across calls
-    assert np.array_equal(
-        K.pstable_band_keys_matrix(X, planes, offs, w, m, 1), want
-    )
+    assert np.array_equal(K.pstable_cells_matrix(X, planes, offs, w), want)
+
+
+def test_pstable_one_round_contract(spark):
+    """A one-round call is plan-only: building it (m given) starts no
+    Spark job and persists nothing.  max_rounds=0 and 1 are the same
+    single pass, and an empty query frame returns zero rows with the
+    result schema at one round and at three."""
+    from qalsh_spark.operators.ann import pstable_topk
+
+    vec, q = _embedding_frames(spark, n=300, nq=5)
+    kw = dict(k=5, p=2.0, w=2.0, m=8, min_collisions=4)
+    sc = spark.sparkContext
+    group = f"pstable-one-round-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        ps: list = []
+        one = pstable_topk(vec, q, max_rounds=1, persists=ps, **kw)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert ps == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows1 = sorted(tuple(r) for r in one.collect())
+    zero = pstable_topk(vec, q, max_rounds=0, **kw)
+    rows0 = sorted(tuple(r) for r in zero.collect())
+    assert rows1, "premise: the single pass finds candidates"
+    assert rows0 == rows1
+    for rounds in (1, 3):
+        ps = []
+        empty = pstable_topk(vec, q.limit(0), max_rounds=rounds, persists=ps, **kw)
+        assert empty.schema == one.schema
+        assert empty.count() == 0
+        for df in ps:
+            df.unpersist()
 
 
 def test_pstable_alpha_sane():
@@ -173,19 +231,15 @@ def test_pstable_l1_recall_on_mnist_subset(spark, mnist):
     assert recall >= 0.8, f"pstable l1 recall@10 {recall:.3f}"
 
 
-def test_pstable_plan_broadcasts_query_keys(spark, mnist):
-    """Discovery must not shuffle the big side: the query-key join is a
+def test_pstable_plan_broadcasts_query_keys(spark):
+    """Discovery must not shuffle the big side: the query-cell join is a
     BroadcastHashJoin and the only wide exchange before rescoring is the
     groupBy(qid, vec_id) collision counter."""
     from qalsh_spark.operators.ann import pstable_topk
 
-    data, queries, _, _ = mnist
-    vec = spark.createDataFrame(points_to_pandas(data[:1000]))
-    q = spark.createDataFrame(points_to_pandas(queries[:3], "qid", "qvec"))
-    out = pstable_topk(vec, q, k=5, p=2.0, w=1000.0, m=8, min_collisions=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "Exchange hashpartitioning(band_key" not in plan, plan
+    vec, q = _embedding_frames(spark)
+    out = pstable_topk(vec, q, k=5, p=2.0, w=2.0, m=8, min_collisions=4)
+    _assert_discovery_broadcast(out._jdf.queryExecution().executedPlan().toString())
 
 
 def test_pstable_lhalf_recall_on_mnist_subset(spark, mnist):
@@ -292,7 +346,7 @@ def test_pstable_rehash_fills_underfilled_queries(spark, mnist):
     assert recall >= 0.85, f"rehash recall@10 {recall:.3f}"
 
 
-def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
+def test_pstable_rehash_discovery_broadcasts_query_cells(spark):
     """The rehash rounds must keep the single-pass plan discipline: the
     pending query cells broadcast (BroadcastHashJoin), the big side is
     never hash-exchanged for discovery — the only wide exchange is the
@@ -301,27 +355,28 @@ def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
     where the discovery join lives."""
     from qalsh_spark.operators.ann import pstable_topk
 
-    data, queries, _, _ = mnist
-    vec = spark.createDataFrame(points_to_pandas(data[:1000]))
-    q = spark.createDataFrame(points_to_pandas(queries[:3], "qid", "qvec"))
+    vec, q = _embedding_frames(spark)
     ps: list = []
+    # w well under the 10-NN distance: round 0 certifies no query, so
+    # round 1 runs over a real pending set
     out = pstable_topk(
-        vec, q, k=5, p=2.0, w=50.0, m=8, min_collisions=4,
-        max_rounds=2, persists=ps,
+        vec, q, k=5, p=2.0, w=0.3, m=8, min_collisions=4,
+        max_rounds=3, persists=ps,
     )
-    assert ps, "rehash path must register its per-round persists"
-    # persists = [vcells, pending0, topk0, pending1?, topk1, ...]: pick the
+    # persists = [vcells, topk0, pending1, topk1, pending2]: pick the
     # per-round top-k frames by their result schema
     rounds = [df for df in ps if "rank" in df.columns]
-    assert rounds, "per-round top-k frames must be registered"
-    round_plan = rounds[0]._jdf.queryExecution().optimizedPlan().toString()
-    assert "BroadcastHashJoin" in round_plan, round_plan
-    assert "Exchange hashpartitioning(cellr" not in round_plan, round_plan
-    # the pending set must ride as a broadcast JOIN, never as qid literals
-    # baked into the plan (the r4 design collected qids and used isin)
-    assert " IN (" not in round_plan and "isin" not in round_plan, round_plan
+    assert len(rounds) == 2, "rounds 0 and 1 must persist their top-k"
+    for df in rounds:
+        round_plan = df._jdf.queryExecution().optimizedPlan().toString()
+        _assert_discovery_broadcast(round_plan)
+        # the pending set must ride as a broadcast JOIN, never as qid
+        # literals baked into the plan (the r4 design collected qids and
+        # used isin)
+        assert " IN (" not in round_plan and "isin" not in round_plan, round_plan
     final_plan = out._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in final_plan, final_plan
+    _assert_discovery_broadcast(final_plan)
     for df in ps:
         df.unpersist()
 

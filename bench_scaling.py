@@ -17,7 +17,9 @@ a data-volume-independent fixed cost, and measuring at a second size
 (--fit-docs) lets the harness decompose wall = FIXED + WORK/cores and report
 how the efficiency converges as the fixed term amortizes.
 
-Writes BENCH/scaling.json and BENCH/BASELINE.md.
+Appends every leg to BENCH/runs_ledger.jsonl, then summarizes the ledger
+(`finalize`) into BENCH/scaling.json and the generated section of
+BENCH/BASELINE.md (everything above the HAND_WRITTEN marker line).
 
 Usage: python bench_scaling.py [--docs 4000000] [--fit-docs 1000000]
        [--low 4] [--high 16] [--extra-levels 8,32]
@@ -235,6 +237,8 @@ def _decompose(lo: dict, hi: dict, low: int, high: int) -> dict:
 
 
 LEDGER = os.path.join(REPO, "BENCH", "runs_ledger.jsonl")
+# BENCH/BASELINE.md from this line on is hand-written; _write_md keeps it
+HAND_WRITTEN = "<!-- hand-written below; bench_scaling.py --finalize keeps it -->"
 
 
 def _git_rev() -> str | None:
@@ -313,73 +317,24 @@ def main() -> None:
             else cached_corpus(n, args.seed)
         )
 
-    gate_corpus = corpus_for(args.docs)
     levels = [args.low, args.high] + [
         int(x) for x in args.extra_levels.split(",") if x.strip()
     ]
-    results = _measure(gate_corpus, levels)
+    sizes = [(args.docs, levels)]
+    if args.fit_docs:
+        sizes.append((args.fit_docs, [args.low, args.high]))
     rev = _git_rev()
     os.makedirs(os.path.dirname(LEDGER), exist_ok=True)
-    with open(LEDGER, "a") as f:
-        for cpus, m in results.items():
-            row = {**m, "n_docs_corpus": args.docs}
-            if rev:
-                row["git_rev"] = rev  # sweep rows must be pairable by
-                # finalize's same-rev rule just like run_leg rows
-            f.write(json.dumps(row) + "\n")
-
-    lo, hi = results[args.low], results[args.high]
-    speedup = lo["wall_sec"] / hi["wall_sec"]
-    ratio = args.high / args.low
-    efficiency = speedup / ratio
-    # host-capacity control: what throughput multiple did the HARDWARE
-    # deliver between the two parallelism levels during this measurement?
-    cap = {
-        k: round(hi["cpu_probe"][k] / lo["cpu_probe"][k], 2)
-        for k in lo.get("cpu_probe", {})
-    }
-    host_ok = all(v >= 0.8 * ratio for v in cap.values()) if cap else None
-    summary = {
-        "metric": "dedup_scaling_efficiency",
-        "value": round(efficiency, 3),
-        "unit": f"speedup/{ratio:g}x-cores",
-        "n_docs": args.docs,
-        "low": {"cores": args.low, **lo},
-        "high": {"cores": args.high, **hi},
-        "extra": {c: results[c] for c in results if c not in (args.low, args.high)},
-        "speedup": round(speedup, 2),
-        "host_capacity_ratio": cap,
-        "host_delivered_4x": host_ok,
-        "gate": 0.8,
-        "pass": efficiency >= 0.8,
-        "decomposition": {str(args.docs): _decompose(lo, hi, args.low, args.high)},
-    }
-
-    if args.fit_docs:
-        fit_corpus = corpus_for(args.fit_docs)
-        fit = _measure(fit_corpus, [args.low, args.high])
+    for n_docs, lv in sizes:
+        results = _measure(corpus_for(n_docs), lv)
         with open(LEDGER, "a") as f:
-            for cpus, m in fit.items():
-                row = {**m, "n_docs_corpus": args.fit_docs}
+            for m in results.values():
+                row = {**m, "n_docs_corpus": n_docs}
                 if rev:
-                    row["git_rev"] = rev
+                    row["git_rev"] = rev  # sweep rows must be pairable by
+                    # finalize's same-rev rule just like run_leg rows
                 f.write(json.dumps(row) + "\n")
-        flo, fhi = fit[args.low], fit[args.high]
-        summary["fit"] = {
-            "n_docs": args.fit_docs,
-            "low": {"cores": args.low, **flo},
-            "high": {"cores": args.high, **fhi},
-            "efficiency": round(flo["wall_sec"] / fhi["wall_sec"] / ratio, 3),
-        }
-        summary["decomposition"][str(args.fit_docs)] = _decompose(
-            flo, fhi, args.low, args.high
-        )
-
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
-        json.dump(summary, f, indent=2)
-    _write_md(summary)
-    print(json.dumps(summary))
+    finalize(args)
 
 
 def finalize(args) -> None:
@@ -465,7 +420,6 @@ def finalize(args) -> None:
         "n_docs": args.docs,
         "low": {"cores": args.low, **lo},
         "high": {"cores": args.high, **hi},
-        "extra": {},
         "speedup": round(speedup, 2),
         "host_capacity_ratio": cap,
         "host_delivered_4x": all(v >= 0.8 * ratio for v in cap.values()) if cap else None,
@@ -560,10 +514,6 @@ means that leg ran in a throttled host phase):
 | corpus docs | level | wall (s) | docs/hour | probe py/core | probe np/core |
 |---|---|---|---|---|---|
 {rows}"""
-    extra_rows = "".join(
-        f"| (extra) | local[{m['cores']}] | {m['wall_sec']} | {m['docs_per_hour']:,.0f} |\n"
-        for m in s.get("extra", {}).values()
-    )
     fit_block = ""
     if "fit" in s:
         f = s["fit"]
@@ -628,7 +578,7 @@ web documents, seed 42), at two parallelism levels, each in a fresh JVM:
 |---|---|---|---|
 | N  | local[{lo['cores']}] | {lo['wall_sec']} | {lo['docs_per_hour']:,.0f} |
 | 4N | local[{hi['cores']}] | {hi['wall_sec']} | {hi['docs_per_hour']:,.0f} |
-{extra_rows}
+
 - **speedup** {s['speedup']}x on {ratio}x cores
 - **scaling efficiency = (throughput@4N / throughput@N) / {ratio} = {s['value']}**
 - gate >= {s['gate']}: **{"PASS" if s['pass'] else "FAIL"}**
@@ -710,8 +660,15 @@ level, then `python bench_scaling.py --finalize --docs {s['n_docs']} --low
 {lo['cores']} --high {hi['cores']}`
 (writes BENCH/scaling.json + this file).
 """
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
+    path = os.path.join(REPO, "BENCH", "BASELINE.md")
+    tail = ""
+    if os.path.exists(path):
+        with open(path) as f:
+            old = f.read()
+        if HAND_WRITTEN in old:
+            tail = "\n" + old[old.index(HAND_WRITTEN):]
+    with open(path, "w") as f:
+        f.write(md + tail)
 
 
 if __name__ == "__main__":

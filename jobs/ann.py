@@ -84,6 +84,7 @@ def main() -> None:
         ivf_topk,
         lsh_topk,
         pstable_topk,
+        resolve_metric,
     )
     from qalsh_spark.operators.drusilla import qalsh_plus_topk
     from qalsh_spark.queries import ann_recall_sweep
@@ -118,6 +119,8 @@ def main() -> None:
     metric = args.metric
     if metric not in ("cosine", "l1", "l2"):
         metric = float(metric)
+    # pstable is an l_p lane: "cosine" ranks by l2 there
+    p = resolve_metric(metric) or 2.0
 
     t0 = time.time()
     if args.algo == "brute":
@@ -127,10 +130,9 @@ def main() -> None:
     elif args.algo == "lsh":
         topk = lsh_topk(emb, queries, k=args.k)
     elif args.algo == "pstable":
-        p = {"cosine": 2.0, "l2": 2.0, "l1": 1.0}.get(metric, metric)
         pstable_persists: list = []
         topk = pstable_topk(
-            emb, queries, k=args.k, p=float(p), w=args.w, radius=args.radius,
+            emb, queries, k=args.k, p=p, w=args.w, radius=args.radius,
             m=args.m, max_rounds=args.max_rounds, persists=pstable_persists,
         )
     elif args.algo == "ivf":
@@ -174,8 +176,7 @@ def main() -> None:
         # so the sweep must use the resolved l_p — evaluating an l2 ranking
         # under 1-cosine would make avg_ratio meaningless (even negative).
         if args.algo == "pstable":
-            p = {"cosine": 2.0, "l2": 2.0, "l1": 1.0}.get(metric, metric)
-            sweep_metric = {2.0: "l2", 1.0: "l1"}.get(float(p), float(p))
+            sweep_metric = p
         elif args.algo in ("brute", "blocked"):
             sweep_metric = metric
         else:

@@ -12,8 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -32,7 +31,6 @@ class DedupConfig:
     # hamming <= blocks - key_blocks.  (A naive 4x16-bit pigeonhole saturates
     # its 65k-bucket key space around 10^5 docs and floods quadratic random
     # collisions — see kernels.simhash_band_keys.)
-    simhash_bits: int = 64
     simhash_blocks: int = 6
     simhash_key_blocks: int = 3
     hamming_max: int = 3
@@ -41,14 +39,9 @@ class DedupConfig:
     suffix_window: int = 16       # rolling-hash window (bytes) for anchors
     suffix_gap: int = 32          # expected anchor gap: anchor where h % gap == 0
     lcp_min: int = 100            # shared-run length proven by one bucket key
-    run_min: int = 200            # minimum verbatim run (docs-level semantics)
 
     # --- skew / scale -------------------------------------------------------
     bucket_cap: int = 64          # buckets larger than this use star pairing
-    shuffle_partitions: int = 32
-
-    # --- misc ---------------------------------------------------------------
-    max_pairs_per_bucket: int = field(default=2016, repr=False)  # cap*(cap-1)/2
 
     def __post_init__(self) -> None:
         if self.bands * self.rows != self.num_perm:
@@ -122,7 +115,3 @@ class DedupConfig:
 
     def expected_recall(self, s: float) -> float:
         return self.band_collision_prob(s, self.bands, self.rows)
-
-    @property
-    def simhash_n_keys(self) -> int:
-        return math.comb(self.simhash_blocks, self.simhash_key_blocks)

@@ -2,13 +2,28 @@
 the direct parity lane with the reference's c-k-ANNS mission
 (/root/reference/methods/qalsh.h:25-32, README.md:5-9).
 
-Four lanes:
+Input contract, every lane: `vectors(vec_id bigint, embedding
+array<double>)` and `queries(qid bigint, qvec array<double>)`; extra
+columns are ignored.  Output, every lane: `(qid, neighbor_id, score,
+rank)`, at most k rows per query.
+
+Shared final step (the reference's one k-NN list and one distance
+dispatch, methods/pri_queue.cc:51-80 and util.h:388-464):
+  - `resolve_metric` maps "cosine" to None and "l2" / "l1" / a float p to
+    the l_p exponent;
+  - `rescore` turns candidate pairs `(qid, vec_id)` into scored rows: join
+    `vectors`, broadcast-join `queries`, score JVM-side (zip_with /
+    aggregate, whole-stage codegen);
+  - `rank_topk` keeps the top k per query under (score, neighbor_id)
+    ordering — score descending for cosine, ascending for l_p.
+
+Lanes:
   1. `brute_force_topk` — exact top-k under cosine / l2 / the reference's
      full l_p family (p in {0.5, 1, 2}, /root/reference/methods/util.h:280-464),
      the analog of the ground-truth linear scan `-alg 0` / `-alg 5`
-     (/root/reference/methods/ann.h:17-48, 52-103).  crossJoin + JVM-side
-     zip_with/aggregate arithmetic + window top-k: fine for ground truth and
-     small query sets, O(n*q) by design.
+     (the reference's methods/ann.h:17-48, 52-103): the scorer over
+     `queries.crossJoin(vectors)`, O(n*q) by design.
+     `brute_force_topk_blocked` is its scale path (map-side local top-k).
   2. `random_projection_buckets` + `lsh_topk` — the QALSH concept mapping:
      project every vector onto m seeded random hyperplanes (sign bits =
      SRP-LSH, the cosine analog of the p-stable projection at
@@ -35,8 +50,8 @@ Scale discipline:
   - Cell assignment is per-row math against a broadcast-by-closure matrix:
     ZERO shuffle of the big side (the previous window-over-crossJoin design
     shuffled and sorted n x n_cells rows).
-  - Exact re-scoring of candidates stays JVM-side (zip_with/aggregate,
-    whole-stage codegen).
+  - The query side is small by protocol and always broadcast explicitly,
+    so the big side is never shuffled for candidate discovery.
 """
 
 from __future__ import annotations
@@ -48,7 +63,11 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
 from qalsh_spark import kernels as K
-from qalsh_spark.kernels import srp_planes  # re-export (public API)
+
+# bound on the driver-collected query side of brute_force_topk_blocked
+MAX_QUERIES = 100_000
+# rows collected on the driver to draw IVF / QALSH+ centroids from
+CENTROID_SAMPLE = 1024
 
 
 def _dot(a, b):
@@ -102,38 +121,60 @@ def lp_dist(a, b, p: float):
     return F.pow(acc, F.lit(1.0 / p))
 
 
+def resolve_metric(metric: str | float) -> float | None:
+    """"cosine" -> None (similarity); "l2" / "l1" / a float p -> the l_p
+    exponent p (distance)."""
+    if metric == "cosine":
+        return None
+    return float({"l2": 2.0, "l1": 1.0}.get(metric, metric))
+
+
+def _score(pairs: DataFrame, p: float | None) -> DataFrame:
+    """Rows carrying (qid, vec_id, qvec, embedding) -> (qid, neighbor_id,
+    score): cosine similarity when p is None, else l_p distance."""
+    if p is None:
+        score = cosine_sim(F.col("qvec"), F.col("embedding"))
+    else:
+        score = lp_dist(F.col("qvec"), F.col("embedding"), p)
+    return pairs.select(
+        "qid", F.col("vec_id").alias("neighbor_id"), score.alias("score")
+    )
+
+
+def rescore(
+    cand: DataFrame, vectors: DataFrame, queries: DataFrame, p: float | None
+) -> DataFrame:
+    """Candidate pairs cand(qid, vec_id) -> exactly scored (qid,
+    neighbor_id, score): join the vectors, broadcast-join the (small by
+    protocol) queries, score JVM-side."""
+    joined = cand.join(vectors.select("vec_id", "embedding"), on="vec_id").join(
+        F.broadcast(queries.select("qid", "qvec")), on="qid"
+    )
+    return _score(joined, p)
+
+
+def rank_topk(scored: DataFrame, k: int, p: float | None) -> DataFrame:
+    """(qid, neighbor_id, score) -> the top k per query with a `rank`
+    column, ordered (score, neighbor_id): score descending for cosine (p
+    None), ascending for l_p — the reference's (dist, id) ordering
+    (the reference's methods/pri_queue.cc:51-80)."""
+    by_score = F.desc("score") if p is None else F.asc("score")
+    w = Window.partitionBy("qid").orderBy(by_score, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     metric: str | float = "cosine",
 ) -> DataFrame:
-    """Exact top-k per query. Result: (qid, neighbor_id, score, rank).
-    `metric`: "cosine" (descending score) or "l2" / "l1" / a float p for
-    l_p distance (ascending).  Ties broken by neighbor id — mirrors the
-    reference's (dist, id) ordering (/root/reference/methods/pri_queue.cc:51-80)."""
-    joined = queries.crossJoin(vectors)
-    if metric == "cosine":
-        score = cosine_sim(F.col(qvec_col), F.col(vec_col))
-        order = [F.desc("score"), F.asc("neighbor_id")]
-    else:
-        p = {"l2": 2.0, "l1": 1.0}.get(metric, metric)
-        score = lp_dist(F.col(qvec_col), F.col(vec_col), float(p))
-        order = [F.asc("score"), F.asc("neighbor_id")]
-    scored = joined.select(
-        F.col(qid_col).alias("qid"),
-        F.col(id_col).alias("neighbor_id"),
-        score.alias("score"),
-    )
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    """Exact top-k per query: every (query, vector) pair scored.
+    `metric`: "cosine" or "l2" / "l1" / a float p for l_p distance."""
+    p = resolve_metric(metric)
+    return rank_topk(_score(queries.crossJoin(vectors), p), k, p)
 
 
 def brute_force_topk_blocked(
@@ -141,26 +182,21 @@ def brute_force_topk_blocked(
     queries: DataFrame,
     k: int = 10,
     metric: str | float = 2.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     round_f32: bool = False,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Exact top-k per query — the SCALE path for ground-truth generation
     (the reference's linear scan, /root/reference/methods/ann.h:52-103 +
     util.h:465-484 kNN_search), replacing brute_force_topk's q x n crossJoin
     with map-side reduction:
 
-      - the (small-by-protocol) query matrix is collected once and
-        broadcast BY CLOSURE into an Arrow-batched mapInPandas over the
-        vector table — the big side is scanned once, never shuffled, never
-        crossJoin-exploded;
+      - the (small-by-protocol, at most MAX_QUERIES rows) query matrix is
+        collected once and broadcast BY CLOSURE into an Arrow-batched
+        mapInPandas over the vector table — the big side is scanned once,
+        never shuffled, never crossJoin-exploded;
       - each batch computes its (batch x qn) distance matrix with one BLAS
         op and emits only its LOCAL top-k per query, so the shuffle carries
         n_batches * qn * k slim rows instead of n * qn;
-      - a final per-query window keeps the global top-k.
+      - `rank_topk` keeps the global top-k.
 
     Ordering is (key ASC, id ASC) — ties on the key the reference stores
     (float32 when round_f32=True), insertion order otherwise — matching
@@ -173,15 +209,15 @@ def brute_force_topk_blocked(
     For p=2 the distance matrix uses |x|^2 - 2 x.q + |q|^2, exact in
     float64 for integer-valued data; for float data it differs from the
     direct form by normal rounding noise."""
-    qpd = queries.select(qid_col, qvec_col).limit(max_queries + 1).toPandas()
-    if len(qpd) > max_queries:
+    qpd = queries.select("qid", "qvec").limit(MAX_QUERIES + 1).toPandas()
+    if len(qpd) > MAX_QUERIES:
         raise ValueError(
-            f"brute_force_topk_blocked: query side exceeds {max_queries} rows"
+            f"brute_force_topk_blocked: query side exceeds {MAX_QUERIES} rows"
         )
-    qids = qpd[qid_col].to_numpy().astype(np.int64)
-    Q = np.stack(qpd[qvec_col].to_numpy()).astype(np.float64)
-    cosine = metric == "cosine"
-    p = None if cosine else float({"l2": 2.0, "l1": 1.0}.get(metric, metric))
+    qids = qpd["qid"].to_numpy().astype(np.int64)
+    Q = np.stack(qpd["qvec"].to_numpy()).astype(np.float64)
+    p = resolve_metric(metric)
+    cosine = p is None
     if cosine:
         Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
@@ -189,8 +225,8 @@ def brute_force_topk_blocked(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy().astype(np.int64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy().astype(np.int64)
             if cosine:
                 S = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ Qn.T
                 key = -S  # rank descending similarity as ascending key
@@ -220,8 +256,6 @@ def brute_force_topk_blocked(
                 out_q.append(np.full(kk, qids[j], dtype=np.int64))
                 out_i.append(ids[top])
                 out_s.append(score[top, j])
-            import pandas as pd  # local: executor-side import
-
             yield pd.DataFrame(
                 {
                     "qid": np.concatenate(out_q),
@@ -230,19 +264,10 @@ def brute_force_topk_blocked(
                 }
             )
 
-    local = vectors.select(
-        F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)
-    ).mapInPandas(gen, schema="qid long, neighbor_id long, score double")
-    order = (
-        [F.desc("score"), F.asc("neighbor_id")]
-        if cosine
-        else [F.asc("score"), F.asc("neighbor_id")]
+    local = vectors.select("vec_id", "embedding").mapInPandas(
+        gen, schema="qid long, neighbor_id long, score double"
     )
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(local, k, p)
 
 
 def srp_band_keys_udf(m: int, bands: int, rows: int, seed: int = 6):
@@ -270,21 +295,15 @@ def srp_band_keys_udf(m: int, bands: int, rows: int, seed: int = 6):
 
 
 def random_projection_buckets(
-    vectors: DataFrame,
-    m: int = 16,
-    bands: int = 4,
-    seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, m: int = 16, bands: int = 4, seed: int = 6
 ) -> DataFrame:
     """(vec_id, band_key) bucket rows from SRP sign bands — the
     embedding-space twin of operators/banding.py.  The band index is mixed
     into each key by the kernel, so the bucket join keys on band_key alone
     (slim 16-byte rows)."""
-    rows = m // bands
     sig = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        srp_band_keys_udf(m, bands, rows, seed)(F.col(vec_col)).alias("keys"),
+        "vec_id",
+        srp_band_keys_udf(m, bands, m // bands, seed)(F.col("embedding")).alias("keys"),
     )
     return sig.select("vec_id", F.explode("keys").alias("band_key"))
 
@@ -296,17 +315,13 @@ def lsh_topk(
     m: int = 16,
     bands: int = 4,
     seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
 ) -> DataFrame:
     """Approximate top-k: score only vectors sharing >= 1 SRP band with the
-    query (collision filter), then exact cosine on the candidates.
-    Result schema matches brute_force_topk."""
-    vb = random_projection_buckets(vectors, m, bands, seed, id_col, vec_col)
+    query (collision filter), then exact cosine on the candidates."""
+    vb = random_projection_buckets(vectors, m, bands, seed)
     qb = random_projection_buckets(
-        queries, m, bands, seed, qid_col, qvec_col
+        queries.select(F.col("qid").alias("vec_id"), F.col("qvec").alias("embedding")),
+        m, bands, seed,
     ).withColumnRenamed("vec_id", "qid")
     # the query side is small by protocol: broadcast EXPLICITLY so the
     # big side is never shuffled for discovery at any table size (the
@@ -317,17 +332,7 @@ def lsh_topk(
         .select("qid", "vec_id")
         .distinct()
     )
-    scored = (
-        cand.join(vectors.select(F.col(id_col).alias("vec_id"), vec_col), on="vec_id")
-        .join(F.broadcast(queries.select(F.col(qid_col).alias("qid"), qvec_col)), on="qid")
-        .select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_sim(F.col(qvec_col), F.col(vec_col)).alias("score"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return rank_topk(rescore(cand, vectors, queries, None), k, None)
 
 
 def pstable_cells_udf(m: int, p: float, w: float, seed: int = 6):
@@ -371,10 +376,6 @@ def pstable_topk(
     m: int | None = None,
     min_collisions: int | None = None,
     seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     max_rounds: int = 1,
     persists: list | None = None,
 ) -> DataFrame:
@@ -424,7 +425,7 @@ def pstable_topk(
     so the big side is never shuffled for discovery — one map-side
     equi-join, then a groupBy(qid, vec_id) count (the distributed freq[]
     counter) over slim collision rows, then rescoring joins for the
-    filtered candidates only.
+    filtered candidates only (`rescore`, then `rank_topk`).
 
     Only work BETWEEN rounds materializes anything: with more than one
     round, the exploded vector cells (read by every round), each
@@ -469,18 +470,13 @@ def pstable_topk(
 
     sign = pstable_cells_udf(m, p, w, seed)
     vcells = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(sign(F.col(vec_col))).alias("j", "cell"),
+        "vec_id", F.posexplode(sign(F.col("embedding"))).alias("j", "cell")
     )
     if rounds > 1:
         vcells = keep(vcells)
     qcells = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.posexplode(sign(F.col(qvec_col))).alias("j", "qcell"),
+        "qid", F.posexplode(sign(F.col("qvec"))).alias("j", "qcell")
     )
-    vpts = vectors.select(F.col(id_col).alias("vec_id"), vec_col)
-    qpts = queries.select(F.col(qid_col).alias("qid"), qvec_col)
-    w_rank = Window.partitionBy("qid").orderBy(F.asc("score"), F.asc("neighbor_id"))
     pending = None  # round 0 runs over every query
     out = None
     for r in range(rounds):
@@ -494,17 +490,7 @@ def pstable_topk(
             .filter(F.col("count") >= min_collisions)
             .select("qid", "vec_id")
         )
-        topk_r = (
-            cand_r.join(vpts, on="vec_id")
-            .join(F.broadcast(qpts), on="qid")
-            .select(
-                "qid",
-                F.col("vec_id").alias("neighbor_id"),
-                lp_dist(F.col(qvec_col), F.col(vec_col), float(p)).alias("score"),
-            )
-            .withColumn("rank", F.row_number().over(w_rank))
-            .filter(F.col("rank") <= k)
-        )
+        topk_r = rank_topk(rescore(cand_r, vectors, queries, float(p)), k, p)
         if r == rounds - 1:
             # last round: every still-pending query emits best-so-far
             # (topk_r is already restricted to pending qids by the qk join)
@@ -522,7 +508,7 @@ def pstable_topk(
             )
             taken = topk_r.join(F.broadcast(done_q), on="qid", how="left_semi")
             if pending is None:
-                pending = queries.select(F.col(qid_col).alias("qid")).distinct()
+                pending = queries.select("qid").distinct()
             pending = keep(pending.join(done_q, on="qid", how="left_anti"))
         out = taken if out is None else out.unionByName(taken)
         # loop control: ONE scalar action per round boundary (also
@@ -557,21 +543,14 @@ def _cell_assign_udf(cents: np.ndarray, top: int):
     return _udf
 
 
-def sample_centroids(
-    vectors: DataFrame,
-    n_cells: int,
-    seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_n: int = 1024,
-) -> np.ndarray:
+def sample_centroids(vectors: DataFrame, n_cells: int, seed: int = 6) -> np.ndarray:
     """Deterministic seeded-sample centroid matrix (k-means-lite stand-in
     for the reference's kd-tree split planes, methods/qalsh_plus.h:230-250).
-    Bounded driver collect: ``sample_n`` rows regardless of table size."""
+    Bounded driver collect: CENTROID_SAMPLE rows regardless of table size."""
     sample = (
-        vectors.orderBy(F.col(id_col))
-        .limit(sample_n)
-        .select(vec_col)
+        vectors.orderBy(F.col("vec_id"))
+        .limit(CENTROID_SAMPLE)
+        .select("embedding")
         .collect()
     )
     rng = np.random.default_rng(seed)
@@ -586,11 +565,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    sample_n: int = 1024,
 ) -> DataFrame:
     """IVF: seeded-sample centroids (a deterministic ordered sample, the
     k-means-lite stand-in for QALSH+'s per-block representatives), assign
@@ -598,33 +572,21 @@ def ivf_topk(
     (no shuffle), probe the nprobe nearest cells per query, exact-rescore
     the candidate cells only — the reference's block-ranking search
     (/root/reference/methods/qalsh_plus.h:568-598)."""
-    cents = sample_centroids(vectors, n_cells, seed, id_col, vec_col, sample_n)
+    cents = sample_centroids(vectors, n_cells, seed)
 
     vcell = vectors.select(
-        F.col(id_col),
-        F.element_at(_cell_assign_udf(cents, 1)(F.col(vec_col)), 1).alias("cell"),
+        "vec_id",
+        F.element_at(_cell_assign_udf(cents, 1)(F.col("embedding")), 1).alias("cell"),
     )
     qcell = queries.select(
-        F.col(qid_col),
-        F.explode(_cell_assign_udf(cents, nprobe)(F.col(qvec_col))).alias("cell"),
+        "qid",
+        F.explode(_cell_assign_udf(cents, nprobe)(F.col("qvec"))).alias("cell"),
     )
     # query side small by protocol -> explicit broadcast (same rationale
     # as lsh_topk: never shuffle the vector table for discovery)
     cand = (
         vcell.join(F.broadcast(qcell), on="cell")
-        .select(F.col(qid_col).alias("qid"), F.col(id_col).alias("vec_id"))
+        .select("qid", "vec_id")
         .distinct()
     )
-    scored = (
-        cand.join(vectors.select(F.col(id_col).alias("vec_id"), vec_col), on="vec_id")
-        .join(
-            F.broadcast(queries.select(F.col(qid_col).alias("qid"), qvec_col)), on="qid"
-        )
-        .select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_sim(F.col(qvec_col), F.col(vec_col)).alias("score"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return rank_topk(rescore(cand, vectors, queries, None), k, None)

@@ -39,9 +39,10 @@ LANE_SIMHASH = 1
 # pass (functions/signatures.py) plus the shared bucket stream:
 #   1. per document, sample suffix start positions at CONTENT-DEFINED
 #      anchors (rolling hash of the preceding 16 bytes == 0 mod gap,
-#      winnowing-style): two documents sharing a >= run_min verbatim run
-#      place anchors at the same content offsets inside the run, so they
-#      emit comparable suffixes without any global alignment;
+#      winnowing-style): two documents sharing a verbatim run longer than
+#      `lcp_min` plus a few anchor gaps place anchors at the same content
+#      offsets inside the run, so they emit comparable suffixes without
+#      any global alignment;
 #   2. hash the `lcp_min` bytes after each anchor into an int64 bucket key
 #      (kernels.suffix_key_pairs_for_text).  LCP >= lcp_min IFF the first
 #      lcp_min bytes are equal IFF the keys are equal, so equality bucketing

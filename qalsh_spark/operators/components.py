@@ -44,6 +44,10 @@ assert not _CKPT_LEVEL.deserialized, (
     "_CKPT_LEVEL must be a serialized storage level (see OOM note above)"
 )
 
+# bound on label-propagation rounds (the star rule keeps hot components
+# at diameter 2, so real inputs converge in a handful)
+MAX_ITER = 50
+
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Deterministically free a localCheckpoint'd DataFrame's backing RDD.
@@ -63,14 +67,10 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass  # best-effort: worst case we fall back to the ContextCleaner
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, verbose: bool = False
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(a, b) -> components(doc_id, cluster_id) for every vertex that
-    appears in an edge. cluster_id = min doc_id in the component."""
-    import time as _time
-
-    _t0 = _time.time()
+    appears in an edge. cluster_id = min doc_id in the component.  At most
+    MAX_ITER propagation rounds run."""
     # Symmetrize with ONE scan via explode instead of a self-union: Spark's
     # plan canonicalization fails to reuse cache/exchange across self-union
     # branches (measured 50x slower), and explode halves the input reads at
@@ -96,8 +96,6 @@ def connected_components(
         .repartition(F.col("dst"))
     )
     sym = sym.localCheckpoint(True, _CKPT_LEVEL)
-    if verbose:
-        print(f"[cc] sym ckpt {_time.time()-_t0:.1f}s")
     labels = (
         sym.groupBy("src")
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
@@ -105,8 +103,6 @@ def connected_components(
         .withColumn("label", F.least(F.col("label"), F.col("doc_id")))
         .localCheckpoint(True, _CKPT_LEVEL)
     )
-    if verbose:
-        print(f"[cc] labels init {_time.time()-_t0:.1f}s")
 
     # Labels only ever decrease, so the exact (decimal — no int64 overflow)
     # sum of labels strictly decreases iff ANY label changed: convergence is
@@ -117,7 +113,7 @@ def connected_components(
         ).collect()[0]["s"]
 
     prev_sum = _label_sum(labels)
-    for it in range(max_iter):
+    for _ in range(MAX_ITER):
         # neighbor-min pass: label'(v) = min(label(v), min_{u~v} label(u))
         neigh = (
             sym.join(labels.withColumnRenamed("doc_id", "dst"), on="dst")
@@ -142,8 +138,6 @@ def connected_components(
         # instead of O(iterations) frames awaiting the ContextCleaner.
         _release_checkpoint(labels)
         labels = new_labels
-        if verbose:
-            print(f"[cc] iter={it} sum={new_sum} t={_time.time()-_t0:.1f}s")
         if new_sum == prev_sum:
             break
         prev_sum = new_sum

@@ -97,17 +97,16 @@ def token_jaccard_pairs(
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.98,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 16,
     bands: int = 4,
     seed: int = 6,
     bucket_cap: int = 64,
     persists: list | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: SRP-LSH bucket join for
-    candidates, exact cosine verify (same collide-then-verify shape as the
-    document pipeline). Returns (a, b, cos) with a < b, cos >= threshold.
+    """embeddings(vec_id, embedding) -> embedding-cosine near-duplicate
+    pairs: SRP-LSH bucket join for candidates, exact cosine verify (same
+    collide-then-verify shape as the document pipeline). Returns (a, b,
+    cos) with a < b, cos >= threshold.
     Signing is the Arrow-batched SRP UDF (planes in the UDF closure — no
     plan literals, no driver-side dimension probe).
 
@@ -129,7 +128,7 @@ def embedding_near_dup_pairs(
     from qalsh_spark.operators.banding import LANE_EMBED
     from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
 
-    b = random_projection_buckets(embeddings, m, bands, seed, id_col, vec_col)
+    b = random_projection_buckets(embeddings, m, bands, seed)
     buckets = b.select(
         F.col("vec_id").alias("doc_id"),
         F.lit(LANE_EMBED).cast("tinyint").alias("lane_id"),
@@ -139,7 +138,7 @@ def embedding_near_dup_pairs(
         buckets, bucket_cap=bucket_cap, persists=persists
     )
     cand = cand.select("a", "b")
-    vecs = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    vecs = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     return (
         cand.join(vecs.withColumnsRenamed({"id": "a", "v": "va"}), on="a")
         .join(vecs.withColumnsRenamed({"id": "b", "v": "vb"}), on="b")

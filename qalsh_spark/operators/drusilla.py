@@ -33,23 +33,21 @@ from pyspark.sql import DataFrame, Window
 from qalsh_spark import kernels as K
 from qalsh_spark.operators.ann import (
     _cell_assign_udf,
+    _score,
     cosine_sim,
+    pstable_cells_udf,
+    rank_topk,
     sample_centroids,
 )
 
 
-def assign_cells(
-    vectors: DataFrame,
-    cents: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(vectors: DataFrame, cents: np.ndarray) -> DataFrame:
     """(vec_id, embedding, cell) — nearest-centroid routing, per-Arrow-batch
     matmul against the closure-broadcast centroid matrix (no shuffle)."""
     return vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        F.element_at(_cell_assign_udf(cents, 1)(F.col(vec_col)), 1).alias("cell"),
+        "vec_id",
+        "embedding",
+        F.element_at(_cell_assign_udf(cents, 1)(F.col("embedding")), 1).alias("cell"),
     )
 
 
@@ -90,18 +88,13 @@ def qalsh_plus_topk(
     n_cand: int = 8,
     maxk: int = 100,
     seed: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     in_cell_w: float | None = None,
     in_cell_m: int = 16,
     in_cell_min_collisions: int | None = None,
     diagnostics: dict | None = None,
 ) -> DataFrame:
     """Two-level c-k-ANNS: Drusilla block votes pick the cells, exact cosine
-    rescoring picks the neighbors.  Result schema matches brute_force_topk:
-    (qid, neighbor_id, score, rank).
+    rescoring picks the neighbors.
 
     ``maxk`` is the sample-level list size that feeds the votes — the
     reference's MAXK=100 (/root/reference/methods/def.h:43-44 feeding
@@ -120,16 +113,10 @@ def qalsh_plus_topk(
     unit-norm embeddings the l2-based filter ranks like cosine.  Default
     off: at n_cells=8-16 with modest cells, linear rescoring is fine; at
     100 TB with huge cells this is the sublinear composition."""
-    cents = sample_centroids(vectors, n_cells, seed, id_col, vec_col)
-    vcell = assign_cells(vectors, cents, id_col, vec_col)
-    if in_cell_w is not None:
-        from qalsh_spark.operators.ann import pstable_cells_udf
-
-        sign = pstable_cells_udf(in_cell_m, 2.0, in_cell_w, seed)
-        vcell = vcell.withColumn("sig", sign(F.col("embedding")))
-    reps = drusilla_representatives(vcell.drop("sig"), n_proj, n_cand)
-
-    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec"))
+    cents = sample_centroids(vectors, n_cells, seed)
+    vcell = assign_cells(vectors, cents)
+    reps = drusilla_representatives(vcell, n_proj, n_cand)
+    q = queries.select("qid", "qvec")
 
     # sample-level exact search: queries x (tiny) rep table, broadcast —
     # the lsh_->knn2 over sample_data of qalsh_plus.h:575-576
@@ -157,12 +144,17 @@ def qalsh_plus_topk(
     )
     # probe list is tiny (queries x nprobe): broadcast it onto the cell-
     # partitioned big side, rescore candidates exactly
+    cand_cols = ["qid", "vec_id", "embedding"]
+    if in_cell_w is not None:
+        sign = pstable_cells_udf(in_cell_m, 2.0, in_cell_w, seed)
+        vcell = vcell.withColumn("sig", sign(F.col("embedding")))
+        # the query signature is computed once, on the broadcast side
+        q = q.withColumn("qsig", sign(F.col("qvec")))
+        cand_cols.append("sig")
+    cand = vcell.join(F.broadcast(probe), on="cell").select(*cand_cols)
+    joined = cand.join(F.broadcast(q), on="qid")
     if in_cell_w is not None:
         l = in_cell_min_collisions or max(1, in_cell_m // 2)
-        qs = q.withColumn("qsig", sign(F.col("qvec")))
-        cand = vcell.join(F.broadcast(probe), on="cell").select(
-            "qid", "vec_id", "embedding", "sig"
-        )
         # collision count = JVM elementwise equality over two m-arrays —
         # whole-stage codegen, no explode, no extra exchange
         agree = F.aggregate(
@@ -170,24 +162,8 @@ def qalsh_plus_topk(
             F.lit(0),
             lambda acc, v: acc + v,
         )
-        scored = (
-            cand.join(F.broadcast(qs), on="qid")
-            .filter(agree >= F.lit(l))
-            .select(
-                "qid",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine_sim(F.col("qvec"), F.col("embedding")).alias("score"),
-            )
-        )
-    else:
-        cand = vcell.join(F.broadcast(probe), on="cell").select(
-            "qid", "vec_id", "embedding"
-        )
-        scored = cand.join(F.broadcast(q), on="qid").select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_sim(F.col("qvec"), F.col("embedding")).alias("score"),
-        )
+        joined = joined.filter(agree >= F.lit(l))
+    scored = _score(joined, None)
     if diagnostics is not None:
         # test/diagnostic hook only (each .count() is an extra action):
         # how many rows reach the exact kernel vs probed-cell membership —
@@ -196,7 +172,4 @@ def qalsh_plus_topk(
             F.broadcast(probe), on="cell"
         ).count()
         diagnostics["n_rescored"] = scored.count()
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, None)

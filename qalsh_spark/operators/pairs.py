@@ -91,7 +91,6 @@ def _cap_expr(bucket_cap) -> F.Column:
 def candidate_pairs_from_buckets(
     buckets: DataFrame,
     bucket_cap: int | dict[str, int] = 64,
-    dedup: bool = True,
     persists: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """buckets(doc_id, lane_id, band_key) ->
@@ -181,9 +180,7 @@ def candidate_pairs_from_buckets(
         .filter(F.col("doc_id") != F.col("hub"))
         .select(F.col("hub").alias("a"), F.col("doc_id").alias("b"), "lane_id")
     )
-    pairs = pairs_small.unionByName(pairs_star)
-    if dedup:
-        pairs = pairs.dropDuplicates(["a", "b", "lane_id"])
+    pairs = pairs_small.unionByName(pairs_star).dropDuplicates(["a", "b", "lane_id"])
 
     # stats: one slim row per bucket, re-aggregated in-stage from the same
     # persisted partitioning — consuming stats costs a cache scan, not a

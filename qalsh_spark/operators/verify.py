@@ -41,6 +41,10 @@ from qalsh_spark import kernels as K
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.operators.banding import LANE_MINHASH, LANE_SIMHASH, LANE_SUFFIX, lane_name_col
 
+# minhash-lane pairs whose signature estimate falls below
+# jaccard_threshold - PREFILTER_MARGIN skip the exact Jaccard
+PREFILTER_MARGIN = 0.2
+
 
 def jaccard_pairs_udf(shingle_k: int):
     """(a, b, text_a, text_b, need) -> exact Jaccard of the two texts'
@@ -102,7 +106,6 @@ def verify_pairs(
     signatures: DataFrame,
     cfg: DedupConfig,
     documents_with_id: DataFrame,
-    prefilter_margin: float = 0.2,
 ) -> DataFrame:
     """pairs(a,b,lane_id) x signatures x documents_with_id(doc_id, text) ->
     edges(a, b, jaccard, hamming, lanes) for pairs passing their lane's
@@ -119,7 +122,7 @@ def verify_pairs(
                merge unrelated clusters.
 
     `jaccard` is the exact score wherever the minhash estimate passed the
-    prefilter (threshold - prefilter_margin), else 0.0.
+    prefilter (threshold - PREFILTER_MARGIN), else 0.0.
     """
     # zip BEFORE any rename so both join sides carry identical struct field
     # names (required for arrays_overlap equality)
@@ -139,7 +142,7 @@ def verify_pairs(
     j = pairs.join(side("a"), on="a").join(side("b"), on="b")
     hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
     mh_est = F.size(F.array_intersect("mh_a", "mh_b")) / F.lit(cfg.num_perm)
-    need = mh_est >= F.lit(cfg.jaccard_threshold - prefilter_margin)
+    need = mh_est >= F.lit(cfg.jaccard_threshold - PREFILTER_MARGIN)
     lane = F.col("lane_id")
     survivors = j.filter(
         ((lane == LANE_MINHASH) & need)

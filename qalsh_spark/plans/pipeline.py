@@ -38,6 +38,9 @@ from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
 from qalsh_spark.operators.verify import verify_pairs
 from qalsh_spark.sources.catalog import StageCatalog
 
+# the escalation pass re-bands unmatched docs for threshold - ESCALATE_DROP
+ESCALATE_DROP = 0.15
+
 
 @dataclass
 class DedupResult:
@@ -70,7 +73,6 @@ class DedupPipeline:
         enable_suffix: bool = True,
         enable_simhash: bool = True,
         escalate: bool = False,
-        escalate_drop: float = 0.15,
         rows_hint: int | None = None,
     ):
         self.cfg = cfg or DedupConfig()
@@ -84,13 +86,12 @@ class DedupPipeline:
         # multi-band escalation (virtual-rehashing analog,
         # /root/reference/methods/qalsh.h:844-871): after the first verify,
         # re-band the still-unmatched docs' EXISTING minhash signatures at a
-        # coarser (b, r) targeting threshold - escalate_drop, and verify the
+        # coarser (b, r) targeting threshold - ESCALATE_DROP, and verify the
         # recovered candidates.  Buys back the S-curve discovery misses just
         # above the threshold (P(miss|s=0.52) ~ 9% at the default 32x4) at
         # the cost of one extra bucket/pair/verify pass over the unmatched
         # subset only.
         self.escalate = escalate
-        self.escalate_drop = escalate_drop
 
     # -- stages ----------------------------------------------------------
     def sign(self, documents: DataFrame) -> DataFrame:
@@ -137,9 +138,9 @@ class DedupPipeline:
         """Coarser-band candidate pass over docs with no accepted edge yet
         (left_anti on the matched-id set — the resume-style skip join of
         SURVEY §2.6).  Re-uses stored minhash columns; no re-signing."""
-        from qalsh_spark.operators.banding import LANE_MINHASH, reband_minhash_udf
+        from qalsh_spark.operators.banding import reband_minhash_udf
 
-        target = max(0.05, self.cfg.jaccard_threshold - self.escalate_drop)
+        target = max(0.05, self.cfg.jaccard_threshold - ESCALATE_DROP)
         b2, r2 = DedupConfig.tune_bands_prefix(target, self.cfg.num_perm)
         matched = (
             edges.select(F.col("a").alias("doc_id"))
@@ -147,15 +148,13 @@ class DedupPipeline:
             .distinct()
         )
         unmatched = signatures.join(matched, on="doc_id", how="left_anti")
-        buckets = unmatched.select(
+        rebanded = unmatched.select(
             "doc_id",
-            F.lit(LANE_MINHASH).cast("tinyint").alias("lane_id"),
-            F.explode(reband_minhash_udf(b2, r2)(F.col("minhash"))).alias(
-                "band_key"
-            ),
+            reband_minhash_udf(b2, r2)(F.col("minhash")).alias("band_keys"),
         )
         pairs2, _stats = candidate_pairs_from_buckets(
-            buckets, self.cfg.bucket_cap, persists=persists,
+            explode_bands(rebanded, ["minhash"]), self.cfg.bucket_cap,
+            persists=persists,
         )
         return pairs2
 
@@ -311,14 +310,10 @@ def _prepare(documents: DataFrame) -> DataFrame:
 def _plan_fingerprint(df: DataFrame) -> str:
     """Cheap logical fingerprint of the input (schema + source paths). An
     Iceberg catalog would pin snapshot_id here instead."""
-    files = []
     try:
-        files = sorted(f.path for f in df.inputFiles())  # type: ignore[attr-defined]
+        files = sorted(df.inputFiles())
     except Exception:
-        try:
-            files = sorted(df.inputFiles())
-        except Exception:
-            files = []
+        files = []
     payload = (df.schema.json() + "|" + "|".join(files)).encode()
     return hashlib.sha256(payload).hexdigest()[:16]
 

@@ -22,8 +22,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.operators.components import _CKPT_LEVEL
-from qalsh_spark.functions.text import content_md5, quality_features, token_count_col
-from qalsh_spark.operators.ann import brute_force_topk, cosine_sim, ivf_topk, lsh_topk, l2_sqr, _norm
+from qalsh_spark.functions.text import content_md5, quality_features
+from qalsh_spark.operators.ann import (
+    brute_force_topk,
+    brute_force_topk_blocked,
+    cosine_sim,
+    ivf_topk,
+    lsh_topk,
+    pstable_topk,
+)
 from qalsh_spark.operators.dedup import (
     embedding_near_dup_pairs,
     exact_dup_groups,
@@ -223,13 +230,20 @@ def _emb(spark, sf_dir):
     return _t(spark, sf_dir, "embeddings", rebalance=True)
 
 
-def q_knn_bruteforce_cosine(spark, sf_dir):
+def _ann_inputs(spark, sf_dir):
+    """(vectors(vec_id, embedding), queries(qid, qvec)) — the ANN operator
+    contract; the queries are the first 10 vectors."""
     emb = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
+    return emb, queries
+
+
+def q_knn_bruteforce_cosine(spark, sf_dir):
+    emb, queries = _ann_inputs(spark, sf_dir)
     out = brute_force_topk(emb, F.broadcast(queries), k=5)
     return out.select("qid", "neighbor_id", F.round("score", 3).alias("cos"), "rank")
 
@@ -254,12 +268,7 @@ SELECT qid, neighbor_id, round(score, 3) AS cos, rank FROM ranked WHERE rank <= 
 def q_knn_bruteforce_l1(spark, sf_dir):
     """Exact top-k under L1 — the reference's l_p family beyond l_2
     (/root/reference/methods/util.h:280-330, CLI p sweep in the run scripts)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     out = brute_force_topk(emb, F.broadcast(queries), k=5, metric="l1")
     return out.select("qid", "neighbor_id", F.round("score", 3).alias("l1"), "rank")
 
@@ -284,12 +293,7 @@ def q_knn_bruteforce_lhalf(spark, sf_dir):
     """Exact top-k under l_0.5 — the reference's fractional-norm kernel
     (/root/reference/methods/util.h:334-384, `calc_l0_sqrt`), completing the
     p in {0.5, 1, 2} CLI sweep as driver-oracle-checked queries."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     out = brute_force_topk(emb, F.broadcast(queries), k=5, metric=0.5)
     return out.select("qid", "neighbor_id", F.round("score", 3).alias("lhalf"), "rank")
 
@@ -317,14 +321,7 @@ def q_knn_blocked_l2(spark, sf_dir):
     tests/test_mnist_parity.py).  Oracle-checked against the same DuckDB
     cross-join the crossJoin lane uses: the two implementations must agree
     with each other AND with SQL."""
-    from qalsh_spark.operators.ann import brute_force_topk_blocked
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     out = brute_force_topk_blocked(emb, queries, k=5, metric=2.0)
     return out.select("qid", "neighbor_id", F.round("score", 3).alias("l2"), "rank")
 
@@ -973,12 +970,7 @@ def q_ann_recall_eval(spark, sf_dir):
     golden-oracle checked (scripts/make_golden.build_ann_lanes freezes the
     single-process sweep; tests/test_golden_ann.py holds Spark to it
     exactly)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     approx = lsh_topk(emb, queries, k=100)
     return ann_recall_sweep(emb, queries, approx)
 
@@ -1159,12 +1151,7 @@ def q_lsh_ann_topk(spark, sf_dir):
     """SRP-LSH approximate top-k — golden-oracle checked (deterministic
     seeded planes + (score, id) ranking; scripts/make_golden.build_ann_lanes
     replays the lane single-process with a bit-exact JVM-fold twin)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     return lsh_topk(emb, queries, k=5).select(
         "qid", "neighbor_id", F.round("score", 3).alias("cos"), "rank"
     )
@@ -1173,12 +1160,7 @@ def q_lsh_ann_topk(spark, sf_dir):
 def q_ivf_ann_topk(spark, sf_dir):
     """IVF approximate top-k — golden-oracle checked (seeded sample
     centroids make the whole lane deterministic)."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     return ivf_topk(emb, queries, k=5).select(
         "qid", "neighbor_id", F.round("score", 3).alias("cos"), "rank"
     )
@@ -1193,12 +1175,7 @@ def q_qalsh_plus_ann_topk(spark, sf_dir):
     asserts recall@10 vs brute force on planted data."""
     from qalsh_spark.operators.drusilla import qalsh_plus_topk
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     return qalsh_plus_topk(emb, queries, k=5, n_cells=8, nprobe=4).select(
         "qid", "neighbor_id", F.round("score", 3).alias("cos"), "rank"
     )
@@ -1215,14 +1192,7 @@ def q_pstable_ann_topk(spark, sf_dir):
     (tests/test_pstable.py).  w = 2.72 (the reference's auto-tuned width
     for c=2, kernels.pstable_w) x radius ~1.18 (the unit-norm embedding
     tables' near-neighbor distance scale at every sf)."""
-    from qalsh_spark.operators.ann import pstable_topk
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     return pstable_topk(
         emb, queries, k=5, p=2.0, w=3.2, m=32, min_collisions=16
     ).select("qid", "neighbor_id", F.round("score", 3).alias("l2"), "rank")
@@ -1237,14 +1207,7 @@ def q_pstable_rehash_ann_topk(spark, sf_dir):
     The oracle is the frozen NumPy replay of the same round/certificate
     semantics in scripts/make_golden.build_ann_lanes.  Recall floors for
     the rehash live in tests/test_pstable.py on the reference's Mnist."""
-    from qalsh_spark.operators.ann import pstable_topk
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     # Small result localCheckpoint-materialized so the loop's per-round
     # caches (vector cells + up to 6 top-k/pending frames) are released
     # before the query returns — same cache hygiene as token_jaccard.
@@ -1272,14 +1235,7 @@ def q_pstable_auto_ann_topk(spark, sf_dir):
     The oracle is the frozen NumPy replay of the same derivations in
     scripts/make_golden.build_ann_lanes; a Mnist recall floor for the
     auto-tuned path lives in tests/test_pstable.py."""
-    from qalsh_spark.operators.ann import pstable_topk
-
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    emb, queries = _ann_inputs(spark, sf_dir)
     return pstable_topk(emb, queries, k=5, p=2.0, radius=1.2).select(
         "qid", "neighbor_id", F.round("score", 3).alias("l2"), "rank"
     )

@@ -18,6 +18,7 @@ from qalsh_spark import kernels as K
 from qalsh_spark.datagen import generate_embeddings
 from qalsh_spark.operators.ann import (
     brute_force_topk,
+    brute_force_topk_blocked,
     ivf_topk,
     lsh_topk,
     srp_band_keys_udf,
@@ -352,3 +353,21 @@ def test_qalsh_plus_in_cell_filter_sublinear_and_recall(spark, emb_df):
     assert diag["n_probed_members"] == base["n_probed_members"]
     assert diag["n_rescored"] < 0.7 * diag["n_probed_members"], diag
     assert diag["n_rescored"] >= 10 * 20  # enough to fill every top-10
+
+
+@pytest.mark.parametrize("metric", ["cosine", "l1", 2.0, 0.5])
+def test_blocked_topk_agrees_with_crossjoin_topk(spark, emb_df, metric):
+    """Cross-validation of the two independent brute-force implementations
+    (crossJoin + JVM zip_with scorer vs the blocked NumPy scan) under every
+    metric form `resolve_metric` accepts: the same neighbor ids in the same
+    rank order per query, and scores equal to 1e-9."""
+    q = emb_df.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    a = brute_force_topk(emb_df, F.broadcast(q), k=10, metric=metric).collect()
+    b = brute_force_topk_blocked(emb_df, q, k=10, metric=metric).collect()
+    ka = {(r["qid"], r["rank"]): (r["neighbor_id"], r["score"]) for r in a}
+    kb = {(r["qid"], r["rank"]): (r["neighbor_id"], r["score"]) for r in b}
+    assert len(ka) == len(kb) == 80
+    assert {k: v[0] for k, v in ka.items()} == {k: v[0] for k, v in kb.items()}
+    assert max(abs(ka[k][1] - kb[k][1]) for k in ka) <= 1e-9

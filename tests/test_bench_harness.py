@@ -87,3 +87,41 @@ def test_no_normalization_against_other_core_count_round(tmp_path):
     _stamp_round(tmp_path, cpus=32)
     probe = {"python_loop": 20.0, "numpy_matmul": 200.0}
     assert _normalized_vs_previous({"q": 3.0}, probe, 4, str(tmp_path)) == {}
+
+
+def test_finalize_keeps_hand_written_tail(tmp_path, monkeypatch):
+    """`--finalize` regenerates only the text above the HAND_WRITTEN marker
+    of BENCH/BASELINE.md; the hand-written gate history below it survives."""
+    import argparse
+
+    import bench_scaling
+
+    bench = tmp_path / "BENCH"
+    bench.mkdir()
+    ledger = bench / "runs_ledger.jsonl"
+    probe = {"python_loop": 10.0, "numpy_matmul": 100.0}
+    ledger.write_text("".join(
+        json.dumps({
+            "cores": cores, "n_docs_corpus": 1000, "git_rev": "abc123",
+            "wall_sec": wall, "docs_per_hour": 3600 * 1000 / wall,
+            "cpu_probe": {k: v * cores for k, v in probe.items()},
+        }) + "\n"
+        for cores, wall in ((2, 40.0), (8, 12.0))
+    ))
+    tail = (
+        f"{bench_scaling.HAND_WRITTEN}\n\n## Round-5 status of the gate\n\n"
+        "hand-written history\n\n## Descoped: Iceberg\n\nkept too\n"
+    )
+    (bench / "BASELINE.md").write_text("# stale generated text\n\n" + tail)
+    monkeypatch.setattr(bench_scaling, "REPO", str(tmp_path))
+    monkeypatch.setattr(bench_scaling, "LEDGER", str(ledger))
+
+    bench_scaling.finalize(argparse.Namespace(
+        docs=1000, low=2, high=8, no_probe_sweep=True
+    ))
+
+    md = (bench / "BASELINE.md").read_text()
+    assert md.endswith(tail)
+    assert "stale generated text" not in md
+    assert "local[2] | 40.0" in md and "local[8] | 12.0" in md
+    assert json.loads((bench / "scaling.json").read_text())["value"] == round(40 / 12 / 4, 3)

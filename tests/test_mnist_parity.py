@@ -79,20 +79,3 @@ def test_spark_blocked_topk_matches_shipped_ground_truth(spark, mnist):
     assert np.array_equal(got_ids, truth["id"].astype(np.int64))
     assert np.array_equal(got_keys, truth["key"])
 
-
-def test_blocked_topk_agrees_with_crossjoin_topk(spark, mnist):
-    """Cross-validation of the two independent brute-force implementations
-    (crossJoin+zip_with JVM path vs blocked numpy path) on a slice: same
-    ids in the same order under l1."""
-    import pyspark.sql.functions as F
-
-    from qalsh_spark.operators.ann import brute_force_topk, brute_force_topk_blocked
-
-    data, queries, _, _ = mnist
-    vec = spark.createDataFrame(points_to_pandas(data[:2000])).repartition(4)
-    q = spark.createDataFrame(points_to_pandas(queries[:5], "qid", "qvec"))
-    a = brute_force_topk(vec, F.broadcast(q), k=10, metric=1.0).collect()
-    b = brute_force_topk_blocked(vec, q, k=10, metric=1.0).collect()
-    ka = {(r["qid"], r["rank"]): r["neighbor_id"] for r in a}
-    kb = {(r["qid"], r["rank"]): r["neighbor_id"] for r in b}
-    assert ka == kb and len(ka) == 50

@@ -180,6 +180,47 @@ def test_pstable_auto_m_recall_on_mnist(spark, mnist):
     assert recall >= 0.9, f"auto-m recall@10 {recall:.3f}"
 
 
+def _embedding_recall(spark, n: int, seed: int = 11, nq: int = 20, **kw) -> float:
+    """recall@10 of pstable_topk(k=10, p=2, **kw) on `generate_embeddings`
+    data (n vectors + nq held-out queries, d = 64) vs the numpy l2 truth;
+    `radius="median"` passes the median true 10-NN distance."""
+    from qalsh_spark.operators.ann import pstable_topk
+
+    X = generate_embeddings(n + nq, d=64, seed=seed).X
+    gt = ground_truth_numpy(X[:n], X[n:], k=10, p=2.0)
+    if kw.get("radius") == "median":
+        kw["radius"] = float(np.median(gt["key"][:, 9]))
+    vec = spark.createDataFrame(points_to_pandas(X[:n])).repartition(4)
+    q = spark.createDataFrame(points_to_pandas(X[n:], "qid", "qvec"))
+    ps: list = []
+    rows = pstable_topk(vec, q, k=10, p=2.0, persists=ps, **kw).collect()
+    for df in ps:
+        df.unpersist()
+    got: dict[int, set] = {}
+    for r in rows:
+        got.setdefault(r["qid"], set()).add(r["neighbor_id"])
+    hits = sum(len(got.get(i, set()) & set(gt["id"][i].tolist())) for i in range(nq))
+    return hits / (10 * nq)
+
+
+def test_pstable_auto_recall_on_embeddings(spark):
+    """The auto-tuned single pass (w, m and min_collisions all derived
+    from c=2, p=2 and radius = the median true 10-NN distance) on 2,000
+    planted-cluster vectors.  Measured recall@10 over seeds 11-15:
+    0.900 / 0.930 / 0.925 / 0.945 / 0.955; this is seed 11, floor 0.85."""
+    recall = _embedding_recall(spark, n=2000, radius="median")
+    assert recall >= 0.85, f"auto single-pass recall@10 {recall:.3f}"
+
+
+def test_pstable_rehash_recall_on_embeddings(spark):
+    """The benchmark's `ann_rehash` operating point (radius 0.2, auto m,
+    max_rounds=3: round 0 certifies almost no query, so the later rounds
+    do the work) on 1,500 vectors.  Measured recall@10 over seeds 11-15:
+    0.920 / 0.900 / 0.835 / 0.935 / 0.925; this is seed 11, floor 0.80."""
+    recall = _embedding_recall(spark, n=1500, radius=0.2, max_rounds=3)
+    assert recall >= 0.80, f"rehash recall@10 {recall:.3f}"
+
+
 def test_pstable_l2_recall_on_mnist_vs_shipped_truth(spark, mnist):
     """recall@10 of the p-stable (Gaussian) lane vs the reference's OWN
     Mnist.gt2.0 over 30 of its shipped queries.  Measured 0.989 at the

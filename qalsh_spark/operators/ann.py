@@ -206,9 +206,14 @@ def brute_force_topk_blocked(
     reproducing the reference's stored keys bit-exactly for integer-valued
     inputs (sums of squares are exact integers < 2^53 in float64, and the
     final float32 rounding commutes with sqrt — see sources/refdata.py).
-    For p=2 the distance matrix uses |x|^2 - 2 x.q + |q|^2, exact in
-    float64 for integer-valued data; for float data it differs from the
-    direct form by normal rounding noise."""
+    For p=2 the expanded form |x|^2 - 2 x.q + |q|^2 (one BLAS op) picks
+    each batch's local top-k, and the direct form sqrt(sum((x - q)^2))
+    gives the score of the picked rows; `round_f32` rounds that score.  For
+    integer-valued data both forms are exact.  For float data the
+    selection can differ from the direct form's only among candidates
+    whose distances lie within about sqrt(eps) * (|x| + |q|) of the k-th;
+    the expanded form's cancellation never reaches the score, so a zero
+    distance reads 0."""
     qpd = queries.select("qid", "qvec").limit(MAX_QUERIES + 1).toPandas()
     if len(qpd) > MAX_QUERIES:
         raise ValueError(
@@ -221,6 +226,9 @@ def brute_force_topk_blocked(
     if cosine:
         Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
+    def f32(a):
+        return a.astype(np.float32).astype(np.float64) if round_f32 else a
+
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -229,33 +237,34 @@ def brute_force_topk_blocked(
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
             if cosine:
                 S = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ Qn.T
-                key = -S  # rank descending similarity as ascending key
-                score = S
+                score = f32(S)
+                key = -score  # rank descending similarity as ascending key
             elif p == 2.0:
                 d2 = (
                     (X * X).sum(axis=1)[:, None]
                     - 2.0 * (X @ Q.T)
                     + (Q * Q).sum(axis=1)[None, :]
                 )
-                score = np.sqrt(np.maximum(d2, 0.0))
-                key = score
+                key = f32(np.sqrt(np.maximum(d2, 0.0)))  # selection only
             else:
                 score = np.empty((len(X), len(Q)))
                 for j in range(len(Q)):
                     ad = np.abs(X - Q[j][None, :])
                     acc = ad.sum(axis=1) if p == 1.0 else (ad**p).sum(axis=1)
                     score[:, j] = acc if p == 1.0 else acc ** (1.0 / p)
-                key = score
-            if round_f32:
-                score = score.astype(np.float32).astype(np.float64)
-                key = score if not cosine else -score
+                score = key = f32(score)
             kk = min(k, len(X))
             out_q, out_i, out_s = [], [], []
             for j in range(len(Q)):
                 top = np.lexsort((ids, key[:, j]))[:kk]
                 out_q.append(np.full(kk, qids[j], dtype=np.int64))
                 out_i.append(ids[top])
-                out_s.append(score[top, j])
+                if p == 2.0:
+                    # direct form on the kk picked rows: the expanded form's
+                    # cancellation leaves ~sqrt(eps)*|x| at distance 0
+                    out_s.append(f32(np.sqrt(((X[top] - Q[j]) ** 2).sum(axis=1))))
+                else:
+                    out_s.append(score[top, j])
             yield pd.DataFrame(
                 {
                     "qid": np.concatenate(out_q),

@@ -371,3 +371,35 @@ def test_blocked_topk_agrees_with_crossjoin_topk(spark, emb_df, metric):
     assert len(ka) == len(kb) == 80
     assert {k: v[0] for k, v in ka.items()} == {k: v[0] for k, v in kb.items()}
     assert max(abs(ka[k][1] - kb[k][1]) for k in ka) <= 1e-9
+
+
+@pytest.mark.parametrize("round_f32", [True, False])
+def test_blocked_l2_topk_matches_numpy_ground_truth(spark, round_f32):
+    """Integer-valued data, where the expanded and the direct l2 form are
+    both exact: the blocked scan reproduces refdata.ground_truth_numpy's
+    (id, float32 key) lists — ties broken by id — whether or not it rounds
+    to float32 before ranking.  Half the queries are drawn from the data,
+    so rank 1 is a zero distance."""
+    from qalsh_spark.sources.refdata import ground_truth_numpy, points_to_pandas
+
+    n, d, k = 2000, 32, 20
+    rng = np.random.default_rng(11)
+    data = rng.integers(0, 16, size=(n, d)).astype(np.float64)
+    queries = np.vstack(
+        [data[rng.choice(n, 5, replace=False)], rng.integers(0, 16, size=(5, d))]
+    ).astype(np.float64)
+    truth = ground_truth_numpy(data, queries, k=k, p=2.0)
+    vec = spark.createDataFrame(points_to_pandas(data)).repartition(4)
+    q = spark.createDataFrame(points_to_pandas(queries, "qid", "qvec"))
+    res = brute_force_topk_blocked(
+        vec, q, k=k, metric=2.0, round_f32=round_f32
+    ).collect()
+    assert len(res) == len(queries) * k
+    got_ids = np.zeros((len(queries), k), dtype=np.int64)
+    got_keys = np.zeros((len(queries), k), dtype=np.float32)
+    for r in res:
+        got_ids[r["qid"], r["rank"] - 1] = r["neighbor_id"]
+        got_keys[r["qid"], r["rank"] - 1] = np.float32(r["score"])
+    assert np.array_equal(got_ids, truth["id"].astype(np.int64))
+    assert np.array_equal(got_keys, truth["key"])
+    assert (got_keys[:5, 0] == 0.0).all()

@@ -130,10 +130,9 @@ def main() -> None:
     elif args.algo == "lsh":
         topk = lsh_topk(emb, queries, k=args.k)
     elif args.algo == "pstable":
-        pstable_persists: list = []
         topk = pstable_topk(
             emb, queries, k=args.k, p=p, w=args.w, radius=args.radius,
-            m=args.m, max_rounds=args.max_rounds, persists=pstable_persists,
+            m=args.m, max_rounds=args.max_rounds,
         )
     elif args.algo == "ivf":
         topk = ivf_topk(emb, queries, k=args.k)
@@ -151,11 +150,6 @@ def main() -> None:
         topk = topk.localCheckpoint(True, _CKPT_LEVEL)
         n_rows = topk.count()
     wall = time.time() - t0
-    if args.algo == "pstable":
-        # release the rounds' caches (the result is already written /
-        # checkpointed, so lineage no longer needs them)
-        for df in pstable_persists:
-            df.unpersist()
 
     metrics: dict = {
         "algo": args.algo,

@@ -32,8 +32,11 @@ Lanes:
      methods/qalsh.h:442-447).
   3. `pstable_topk` — the reference's own hash family for l_p, 0 < p <= 2:
      raw quantized p-stable cells signed once, the collision-count rule,
-     and virtual rehashing (methods/qalsh.h:844-871) as rounds over the
-     same cells; a single pass is round 0.
+     and virtual rehashing (methods/qalsh.h:844-871) as one plan: rounds
+     nest, so one join at the coarsest grid yields every round's
+     collision counts, and each query keeps its first certified round
+     (the price: every query is joined at the coarsest grid).  A single
+     pass is the one-round case.
   4. `ivf_topk` — IVF-style: seeded-sample centroids, route each vector to
      its nearest centroid, probe the closest `nprobe` cells per query — the
      scale path for 100 TB embedding tables (the analog of QALSH+'s kd-tree
@@ -129,37 +132,40 @@ def resolve_metric(metric: str | float) -> float | None:
     return float({"l2": 2.0, "l1": 1.0}.get(metric, metric))
 
 
-def _score(pairs: DataFrame, p: float | None) -> DataFrame:
+def _score(pairs: DataFrame, p: float | None, *carry: str) -> DataFrame:
     """Rows carrying (qid, vec_id, qvec, embedding) -> (qid, neighbor_id,
-    score): cosine similarity when p is None, else l_p distance."""
+    score, *carry): cosine similarity when p is None, else l_p distance."""
     if p is None:
         score = cosine_sim(F.col("qvec"), F.col("embedding"))
     else:
         score = lp_dist(F.col("qvec"), F.col("embedding"), p)
     return pairs.select(
-        "qid", F.col("vec_id").alias("neighbor_id"), score.alias("score")
+        "qid", F.col("vec_id").alias("neighbor_id"), score.alias("score"), *carry
     )
 
 
 def rescore(
     cand: DataFrame, vectors: DataFrame, queries: DataFrame, p: float | None
 ) -> DataFrame:
-    """Candidate pairs cand(qid, vec_id) -> exactly scored (qid,
-    neighbor_id, score): join the vectors, broadcast-join the (small by
-    protocol) queries, score JVM-side."""
+    """Candidate pairs cand(qid, vec_id, ...) -> exactly scored (qid,
+    neighbor_id, score, ...): join the vectors, broadcast-join the (small
+    by protocol) queries, score JVM-side.  Other columns of `cand` ride
+    along."""
     joined = cand.join(vectors.select("vec_id", "embedding"), on="vec_id").join(
         F.broadcast(queries.select("qid", "qvec")), on="qid"
     )
-    return _score(joined, p)
+    return _score(joined, p, *(c for c in cand.columns if c not in ("qid", "vec_id")))
 
 
-def rank_topk(scored: DataFrame, k: int, p: float | None) -> DataFrame:
-    """(qid, neighbor_id, score) -> the top k per query with a `rank`
-    column, ordered (score, neighbor_id): score descending for cosine (p
-    None), ascending for l_p — the reference's (dist, id) ordering
-    (the reference's methods/pri_queue.cc:51-80)."""
+def rank_topk(
+    scored: DataFrame, k: int, p: float | None, by: tuple = ("qid",)
+) -> DataFrame:
+    """(qid, neighbor_id, score) -> the top k per query (per `by` key)
+    with a `rank` column, ordered (score, neighbor_id): score descending
+    for cosine (p None), ascending for l_p — the reference's (dist, id)
+    ordering (the reference's methods/pri_queue.cc:51-80)."""
     by_score = F.desc("score") if p is None else F.asc("score")
-    w = Window.partitionBy("qid").orderBy(by_score, F.asc("neighbor_id"))
+    w = Window.partitionBy(*by).orderBy(by_score, F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
@@ -351,8 +357,8 @@ def pstable_cells_udf(m: int, p: float, w: float, seed: int = 6):
     the reference's methods/qalsh.h:238-244).  One BLAS matmul per batch;
     the plane matrix is generated lazily from (seed, d) at first batch —
     no plan literals, no driver-side dimension probe.  The cells stay
-    arithmetic, so the virtual-rehashing loop can double the bucket width
-    r times with a plain `shiftright(cell, r)` on the ALREADY-SIGNED data
+    arithmetic, so virtual rehashing can double the bucket width r
+    times with a plain `shiftright(cell, r)` on the ALREADY-SIGNED data
     — no re-projection, no second scan of the raw vectors (the quantized
     analog of the reference growing its search radius in place over the
     same B+-tree projections, methods/qalsh.h:844-871)."""
@@ -406,50 +412,44 @@ def pstable_topk(
     reference's auto-tuned unit-radius width (methods/qalsh.h:197-226)
     scaled to the data.  m=None (default) auto-tunes the projection
     count from (c, p, n) with the reference's own formula
-    (kernels.pstable_m, methods/qalsh.h:228-235); min_collisions
-    defaults to the reference's alpha*m with alpha from the
-    collision-probability midpoint (kernels.pstable_alpha).
+    (kernels.pstable_m, methods/qalsh.h:228-235) at the cost of one
+    vectors.count() at plan build; min_collisions defaults to the
+    reference's alpha*m with alpha from the collision-probability
+    midpoint (kernels.pstable_alpha).
 
-    One code path, the reference's: project once, then widen the search
-    radius in place (methods/qalsh.h:844-871, stop rule :478-479).  Both
-    sides are signed ONCE with raw floor cells (pstable_cells_udf); round
-    r joins on `(j, shiftright(cell, r))` — an exact halving of the grid,
-    i.e. bucket width w * 2^r — so no round re-projects or re-scans the
-    raw vectors.  Round 0 runs over every query; round r > 0 only over
-    the still-pending ones (left_anti on satisfied qids, the same
-    escalation shape as the minhash lane in plans/pipeline.py).  A query
-    STOPS with the reference's certificate (methods/qalsh.h:478-479):
-    after exact rescoring of that round's candidates, the k-th best TRUE
-    distance must be <= c * R_r where R_r = radius * 2^r — not merely
-    ">= k candidates seen", which would accept k lucky collisions at a
-    radius far below the true k-NN ball and lose recall (measured: 0.61
-    vs 0.95+ under the certificate).  min_collisions stays FIXED across
-    rounds, as the reference's l_ does: the target radius doubles WITH
-    the width, so the collision probability at the round-r radius under
-    the round-r width is unchanged.  Queries still short at the last
-    round return its best-so-far.  `max_rounds` caps the rounds; 0 and 1
-    both mean one round, the single pass at width `w`.
+    Virtual rehashing (methods/qalsh.h:844-871, stop rule :478-479) as
+    ONE plan over R = max(1, max_rounds) rounds.  Round r uses the cells
+    `shiftright(cell, r)` — an exact halving of the grid, bucket width
+    w * 2^r — and the rounds nest: a projection that collides at round r
+    collides at every later round.  So:
 
-    Plan shape per round: the (small-by-protocol) query cells broadcast,
-    so the big side is never shuffled for discovery — one map-side
-    equi-join, then a groupBy(qid, vec_id) count (the distributed freq[]
-    counter) over slim collision rows, then rescoring joins for the
-    filtered candidates only (`rescore`, then `rank_topk`).
+      - discovery: both sides are signed once (pstable_cells_udf) and
+        joined once, query cells broadcast, on `(j, cell >> (R-1))`, the
+        coarsest grid; each hit's first collision round is the number of
+        finer grids on which its cells still differ;
+      - one groupBy(qid, vec_id) (the distributed freq[] counter) yields
+        the per-round counts n_r, non-decreasing in r; the candidate's
+        entry round is the first r with n_r >= min_collisions, which
+        stays FIXED across rounds as the reference's l_ does (the target
+        radius doubles WITH the width, so the collision probability at
+        the round-r radius under the round-r width is unchanged);
+      - each candidate is rescored once (`rescore`) and counted in every
+        round from its entry round on; `rank_topk` ranks the top k per
+        (qid, round);
+      - a query STOPS at its first round whose top-k certifies the
+        reference's rule — k rows and a k-th TRUE distance <= c * R_r with
+        R_r = radius * 2^r, not merely ">= k candidates seen", which
+        accepts k lucky collisions far inside the true k-NN ball (measured
+        recall 0.61 vs 0.95+) — or at round R-1, which returns its
+        best-so-far.  A query with no candidate at any round returns no
+        rows.
 
-    Only work BETWEEN rounds materializes anything: with more than one
-    round, the exploded vector cells (read by every round), each
-    non-final round's top-k (read by the certificate filter, the result
-    union and the next pending set) and each pending set are persisted
-    serialized (PySpark's MEMORY_AND_DISK), and each pending set is
-    counted once for loop control — the only per-round driver value, so
-    a 10^5-query batch never embeds qid literals in the plan or collects
-    per-query rows (tests/test_pstable.py::test_pstable_rehash_10k_queries).
-    A one-round call persists nothing and, when `m` is given, builds its
-    plan without running a Spark job.  Every persisted frame is appended
-    to `persists` for caller-side unpersist once the result is
-    materialized."""
-    from pyspark import StorageLevel
-
+    The plan runs no Spark job when built (given `m`), persists nothing
+    and embeds no per-query literal.  Its trade-off: every query is
+    joined at the coarsest grid, so a query that certifies early still
+    pays the collision rows of round R-1.  `max_rounds` 0 and 1 both
+    mean the single pass at width `w`.  `persists` is accepted for
+    callers that collect caches to release; this lane appends nothing."""
     if w is None:
         if radius is None:
             raise ValueError("pstable_topk: pass w or radius")
@@ -469,63 +469,56 @@ def pstable_topk(
             min_collisions = max(1, m // 2)
     if radius is None:
         radius = w / K.pstable_w(c, p)
-    rounds = max(1, max_rounds)
-
-    def keep(df: DataFrame) -> DataFrame:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if persists is not None:
-            persists.append(df)
-        return df
+    last = max(1, max_rounds) - 1
 
     sign = pstable_cells_udf(m, p, w, seed)
     vcells = vectors.select(
         "vec_id", F.posexplode(sign(F.col("embedding"))).alias("j", "cell")
-    )
-    if rounds > 1:
-        vcells = keep(vcells)
+    ).withColumn("cellr", F.shiftright("cell", last))
     qcells = queries.select(
         "qid", F.posexplode(sign(F.col("qvec"))).alias("j", "qcell")
+    ).withColumn("cellr", F.shiftright("qcell", last))
+    hits = vcells.join(F.broadcast(qcells), on=["j", "cellr"]).select(
+        "qid",
+        "vec_id",
+        sum(
+            ((F.shiftright("cell", r) != F.shiftright("qcell", r)).cast("int")
+             for r in range(last)),
+            F.lit(0),
+        ).alias("first"),
     )
-    pending = None  # round 0 runs over every query
-    out = None
-    for r in range(rounds):
-        qk = qcells if pending is None else qcells.join(F.broadcast(pending), on="qid")
-        qk = qk.select("qid", "j", F.shiftright("qcell", r).alias("cellr"))
-        cand_r = (
-            vcells.select("vec_id", "j", F.shiftright("cell", r).alias("cellr"))
-            .join(F.broadcast(qk), on=["j", "cellr"])
-            .groupBy("qid", "vec_id")
-            .count()
-            .filter(F.col("count") >= min_collisions)
-            .select("qid", "vec_id")
+    # entry round = the number of rounds whose count n_r is still short
+    entry = sum(
+        ((F.count(F.when(F.col("first") <= r, 1)) < min_collisions).cast("int")
+         for r in range(last + 1)),
+        F.lit(0),
+    )
+    cand = (
+        hits.groupBy("qid", "vec_id")
+        .agg(entry.alias("entry"))
+        .filter(F.col("entry") <= last)
+    )
+    scored = rescore(cand, vectors, queries, float(p)).withColumn(
+        "r", F.explode(F.sequence("entry", F.lit(last)))
+    )
+    ranked = rank_topk(scored, k, p, by=("qid", "r"))
+    # the reference's certificate (methods/qalsh.h:478-479) per round;
+    # c * radius * 2^r, bit-equal to the Python float (powers of two
+    # multiply exactly)
+    per_round = Window.partitionBy("qid", "r")
+    certified = (
+        (F.count("*").over(per_round) >= k)
+        & (F.max("score").over(per_round)
+           <= F.lit(float(c * radius)) * F.pow(F.lit(2.0), F.col("r")))
+    )
+    return (
+        ranked.withColumn("ok", certified | (F.col("r") == last))
+        .withColumn(
+            "stop", F.min(F.when(F.col("ok"), F.col("r"))).over(Window.partitionBy("qid"))
         )
-        topk_r = rank_topk(rescore(cand_r, vectors, queries, float(p)), k, p)
-        if r == rounds - 1:
-            # last round: every still-pending query emits best-so-far
-            # (topk_r is already restricted to pending qids by the qk join)
-            taken = topk_r
-        else:
-            topk_r = keep(topk_r)
-            # the reference's certificate (methods/qalsh.h:478-479) as a
-            # distributed filter: >= k exact candidates AND kth <= c * R_r
-            cert_r = c * radius * (2.0**r)
-            done_q = (
-                topk_r.groupBy("qid")
-                .agg(F.count("*").alias("n"), F.max("score").alias("kth"))
-                .filter((F.col("n") >= k) & (F.col("kth") <= F.lit(float(cert_r))))
-                .select("qid")
-            )
-            taken = topk_r.join(F.broadcast(done_q), on="qid", how="left_semi")
-            if pending is None:
-                pending = queries.select("qid").distinct()
-            pending = keep(pending.join(done_q, on="qid", how="left_anti"))
-        out = taken if out is None else out.unionByName(taken)
-        # loop control: ONE scalar action per round boundary (also
-        # populates this round's topk cache, which done_q and the result
-        # union re-read)
-        if r < rounds - 1 and pending.count() == 0:
-            break
-    return out
+        .filter(F.col("r") == F.col("stop"))
+        .select("qid", "neighbor_id", "score", "rank")
+    )
 
 
 def _cell_assign_udf(cents: np.ndarray, top: int):

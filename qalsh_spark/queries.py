@@ -1199,30 +1199,19 @@ def q_pstable_ann_topk(spark, sf_dir):
 
 
 def q_pstable_rehash_ann_topk(spark, sf_dir):
-    """Golden-oracle checked: the p-stable lane's VIRTUAL-REHASHING loop
+    """Golden-oracle checked: the p-stable lane's VIRTUAL REHASHING
     (operators/ann.pstable_topk at max_rounds=6 — the reference's geometric
     radius growth + kth <= c*R stop rule, methods/qalsh.h:844-871 and
     478-479) started at w0 = 0.8, a quarter of the single-pass lane's
-    width, so the early rounds genuinely under-fill and the loop runs.
-    The oracle is the frozen NumPy replay of the same round/certificate
-    semantics in scripts/make_golden.build_ann_lanes.  Recall floors for
-    the rehash live in tests/test_pstable.py on the reference's Mnist."""
+    width, so the early rounds genuinely under-fill and later rounds
+    answer.  The oracle is the frozen NumPy replay of the same
+    round/certificate semantics in scripts/make_golden.build_ann_lanes.
+    Recall floors for the rehash live in tests/test_pstable.py on the
+    reference's Mnist."""
     emb, queries = _ann_inputs(spark, sf_dir)
-    # Small result localCheckpoint-materialized so the loop's per-round
-    # caches (vector cells + up to 6 top-k/pending frames) are released
-    # before the query returns — same cache hygiene as token_jaccard.
-    persists: list = []
-    out = (
-        pstable_topk(
-            emb, queries, k=5, p=2.0, w=0.8, m=32, min_collisions=16,
-            max_rounds=6, persists=persists,
-        )
-        .select("qid", "neighbor_id", F.round("score", 3).alias("l2"), "rank")
-        .localCheckpoint(True, _CKPT_LEVEL)
-    )
-    for df in persists:
-        df.unpersist()
-    return out
+    return pstable_topk(
+        emb, queries, k=5, p=2.0, w=0.8, m=32, min_collisions=16, max_rounds=6
+    ).select("qid", "neighbor_id", F.round("score", 3).alias("l2"), "rank")
 
 
 def q_pstable_auto_ann_topk(spark, sf_dir):

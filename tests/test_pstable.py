@@ -86,10 +86,11 @@ def test_pstable_kernel_deterministic_and_udf_parity(spark):
 
 
 def test_pstable_one_round_contract(spark):
-    """A one-round call is plan-only: building it (m given) starts no
-    Spark job and persists nothing.  max_rounds=0 and 1 are the same
-    single pass, and an empty query frame returns zero rows with the
-    result schema at one round and at three."""
+    """Building the plan is plan-only at every round count: with `m`
+    given, a 1-, 3- or 6-round call starts no Spark job and persists
+    nothing.  max_rounds=0 and 1 are the same single pass, and an empty
+    query frame returns zero rows with the result schema at one round
+    and at three."""
     from qalsh_spark.operators.ann import pstable_topk
 
     vec, q = _embedding_frames(spark, n=300, nq=5)
@@ -98,24 +99,24 @@ def test_pstable_one_round_contract(spark):
     group = f"pstable-one-round-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        ps: list = []
-        one = pstable_topk(vec, q, max_rounds=1, persists=ps, **kw)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        assert ps == []
+        plans = {}
+        for rounds in (1, 3, 6):
+            ps: list = []
+            plans[rounds] = pstable_topk(vec, q, max_rounds=rounds, persists=ps, **kw)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], rounds
+            assert ps == [], rounds
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    one = plans[1]
     rows1 = sorted(tuple(r) for r in one.collect())
     zero = pstable_topk(vec, q, max_rounds=0, **kw)
     rows0 = sorted(tuple(r) for r in zero.collect())
     assert rows1, "premise: the single pass finds candidates"
     assert rows0 == rows1
     for rounds in (1, 3):
-        ps = []
-        empty = pstable_topk(vec, q.limit(0), max_rounds=rounds, persists=ps, **kw)
+        empty = pstable_topk(vec, q.limit(0), max_rounds=rounds, **kw)
         assert empty.schema == one.schema
         assert empty.count() == 0
-        for df in ps:
-            df.unpersist()
 
 
 def test_pstable_alpha_sane():
@@ -192,10 +193,7 @@ def _embedding_recall(spark, n: int, seed: int = 11, nq: int = 20, **kw) -> floa
         kw["radius"] = float(np.median(gt["key"][:, 9]))
     vec = spark.createDataFrame(points_to_pandas(X[:n])).repartition(4)
     q = spark.createDataFrame(points_to_pandas(X[n:], "qid", "qvec"))
-    ps: list = []
-    rows = pstable_topk(vec, q, k=10, p=2.0, persists=ps, **kw).collect()
-    for df in ps:
-        df.unpersist()
+    rows = pstable_topk(vec, q, k=10, p=2.0, **kw).collect()
     got: dict[int, set] = {}
     for r in rows:
         got.setdefault(r["qid"], set()).add(r["neighbor_id"])
@@ -368,13 +366,9 @@ def test_pstable_rehash_fills_underfilled_queries(spark, mnist):
     assert any(short.get(qi, 0) < k for qi in range(nq)), (
         f"premise broken: w0 single pass already fills every query: {short}"
     )
-    ps: list = []
     filled = pstable_topk(
-        vec, q, k=k, p=2.0, w=w0, m=32, min_collisions=16,
-        max_rounds=8, persists=ps,
+        vec, q, k=k, p=2.0, w=w0, m=32, min_collisions=16, max_rounds=8
     ).collect()
-    for df in ps:
-        df.unpersist()
     per_q: dict[int, set] = {}
     for r in filled:
         per_q.setdefault(r["qid"], set()).add(r["neighbor_id"])
@@ -388,45 +382,99 @@ def test_pstable_rehash_fills_underfilled_queries(spark, mnist):
 
 
 def test_pstable_rehash_discovery_broadcasts_query_cells(spark):
-    """The rehash rounds must keep the single-pass plan discipline: the
-    pending query cells broadcast (BroadcastHashJoin), the big side is
-    never hash-exchanged for discovery — the only wide exchange is the
-    groupBy(qid, vec_id) collision counter.  The per-round candidate set
-    is persisted; its cached plan (InMemoryRelation innerChildren) is
-    where the discovery join lives."""
+    """Virtual rehashing keeps the single-pass plan discipline in its one
+    plan: the coarse-grid query cells broadcast (BroadcastHashJoin), the
+    big side is never hash-exchanged on its cell keys for discovery,
+    nothing is cached between rounds (no InMemoryTableScan) and no qid
+    literal is baked into the plan."""
     from qalsh_spark.operators.ann import pstable_topk
 
     vec, q = _embedding_frames(spark)
-    ps: list = []
-    # w well under the 10-NN distance: round 0 certifies no query, so
-    # round 1 runs over a real pending set
+    # w well under the 10-NN distance: round 0 certifies no query
     out = pstable_topk(
-        vec, q, k=5, p=2.0, w=0.3, m=8, min_collisions=4,
-        max_rounds=3, persists=ps,
+        vec, q, k=5, p=2.0, w=0.3, m=8, min_collisions=4, max_rounds=3
     )
-    # persists = [vcells, topk0, pending1, topk1, pending2]: pick the
-    # per-round top-k frames by their result schema
-    rounds = [df for df in ps if "rank" in df.columns]
-    assert len(rounds) == 2, "rounds 0 and 1 must persist their top-k"
-    for df in rounds:
-        round_plan = df._jdf.queryExecution().optimizedPlan().toString()
-        _assert_discovery_broadcast(round_plan)
-        # the pending set must ride as a broadcast JOIN, never as qid
-        # literals baked into the plan (the r4 design collected qids and
-        # used isin)
-        assert " IN (" not in round_plan and "isin" not in round_plan, round_plan
-    final_plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in final_plan, final_plan
-    _assert_discovery_broadcast(final_plan)
-    for df in ps:
-        df.unpersist()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    _assert_discovery_broadcast(plan)
+    assert "InMemoryTableScan" not in plan, plan
+    assert " IN (" not in plan, plan
+
+
+def _spark_l2(X: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """operators/ann.lp_dist(p=2) in NumPy: sqrt of the left fold of the
+    squared differences, in the JVM's summation order."""
+    acc = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        acc = acc + (X[:, j] - q[j]) * (X[:, j] - q[j])
+    return np.sqrt(acc)
+
+
+def test_pstable_round_rule_matches_numpy_replay(spark):
+    """The virtual-rehashing stop rule, row for row at full precision,
+    against a NumPy replay over the `kernels` cells: round r collides on
+    `cell >> r`, a candidate needs >= min_collisions collisions, a query
+    stops at the first round whose k-th distance is <= c * radius * 2^r,
+    and the last round returns its best so far.  The data is planted so
+    that some queries stop in round 0 (tight groups of near-copies), one
+    in round 1 and the rest at the cap, some of them under-filled (random
+    directions, far from every cluster)."""
+    from qalsh_spark.operators.ann import pstable_topk
+
+    k, radius, c, m, l, rounds = 5, 0.15, 2.0, 16, 12, 3
+    rng = np.random.default_rng(11)
+    E = generate_embeddings(1012, d=64, seed=11).X
+    base, held = E[:1000], E[1000:]
+
+    def unit(a):
+        return a / np.linalg.norm(a, axis=-1, keepdims=True)
+
+    X = np.vstack([
+        base,
+        unit(base[:3, None, :] + 0.01 * rng.standard_normal((3, 4, 64))).reshape(-1, 64),
+    ])
+    Q = np.vstack([
+        unit(base[:3] + 0.01 * rng.standard_normal((3, 64))),
+        held,
+        unit(rng.standard_normal((4, 64))),
+    ])
+
+    w = radius * K.pstable_w(c, 2.0)
+    planes = K.pstable_planes(m, 64, 2.0, 6)
+    offs = K.pstable_offsets(m, w, 6)
+    VC = K.pstable_cells_matrix(X, planes, offs, w)
+    QC = K.pstable_cells_matrix(Q, planes, offs, w)
+    want, stops = [], {}
+    for qi in range(len(Q)):
+        for r in range(rounds):
+            cand = np.flatnonzero(((VC >> r) == (QC[qi] >> r)).sum(axis=1) >= l)
+            d = _spark_l2(X[cand], Q[qi])
+            top = np.lexsort((cand, d))[:k]
+            if r == rounds - 1 or (len(top) == k and d[top[-1]] <= c * radius * 2.0**r):
+                stops[qi] = (r, len(top))
+                want += [(qi, int(cand[i]), float(d[i]), n + 1) for n, i in enumerate(top)]
+                break
+    stop_rounds = [r for r, _ in stops.values()]
+    assert {0, 1, rounds - 1} <= set(stop_rounds), stop_rounds
+    assert any(r == rounds - 1 and 0 < n < k for r, n in stops.values()), stops
+
+    vec = spark.createDataFrame(points_to_pandas(X)).repartition(4)
+    q = spark.createDataFrame(points_to_pandas(Q, "qid", "qvec"))
+    got = sorted(
+        tuple(r)
+        for r in pstable_topk(
+            vec, q, k=k, p=2.0, radius=radius, c=c, m=m, min_collisions=l,
+            max_rounds=rounds,
+        ).select("qid", "neighbor_id", "score", "rank").collect()
+    )
+    want.sort()
+    assert [(a, b, d) for a, b, _, d in got] == [(a, b, d) for a, b, _, d in want]
+    assert max(abs(g[2] - w_[2]) for g, w_ in zip(got, want)) <= 1e-12
 
 
 def test_pstable_rehash_10k_queries(spark):
-    """Scale smoke for the DataFrame pending-set design: a 10,000-query
-    batch through the rehash loop must complete without embedding qid
-    literals in any plan or collecting per-query rows on the driver
-    (driver state per round = ONE scalar count).  Synthetic data (no
+    """Scale smoke for the one-plan rehash: a 10,000-query batch over
+    four rounds must complete without embedding qid literals in the plan
+    or collecting per-query rows on the driver.  Synthetic data (no
     Mnist needed): 500 gaussian vectors, queries = the vectors cycled
     with small perturbations, so true neighbors exist.  Asserts
     completion, per-query row-count contract (<= k), coverage (>= 99% of
@@ -447,14 +495,10 @@ def test_pstable_rehash_10k_queries(spark):
     q = spark.createDataFrame(
         pd.DataFrame({"qid": np.arange(nq), "qvec": list(Q)})
     ).repartition(8)
-    ps: list = []
     out = pstable_topk(
-        vec, q, k=k, p=2.0, w=1.0, m=8, min_collisions=2,
-        max_rounds=4, persists=ps,
+        vec, q, k=k, p=2.0, w=1.0, m=8, min_collisions=2, max_rounds=4
     )
     rows = out.collect()
-    for df in ps:
-        df.unpersist()
     per_q: dict[int, list] = {}
     for r in rows:
         per_q.setdefault(r["qid"], []).append((r["rank"], r["neighbor_id"]))

@@ -158,9 +158,18 @@ def doc_id_expr(url_col):
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def with_doc_id(documents: DataFrame) -> DataFrame:
-    """Mint the compact deterministic doc_id from the url primary key."""
-    return documents.withColumn("doc_id", doc_id_expr(F.col("url")))
+def conform_documents(documents: DataFrame) -> DataFrame:
+    """The document contract shared by the batch `prepared` stage and
+    sign_documents: a populated `text` (ensure_text), null `warc_ts` and
+    `lang` where the input lacks them, and the deterministic doc_id minted
+    from the url primary key."""
+    cols = set(documents.columns)
+    df = ensure_text(documents)
+    if "warc_ts" not in cols:
+        df = df.withColumn("warc_ts", F.lit(None).cast("timestamp"))
+    if "lang" not in cols:
+        df = df.withColumn("lang", F.lit(None).cast("string"))
+    return df.withColumn("doc_id", doc_id_expr(F.col("url")))
 
 
 def sign_documents(
@@ -173,14 +182,9 @@ def sign_documents(
     `rows_hint`: approximate input row count, if the caller knows it (the
     batch job counts its input anyway).  Bounds the signing stage's
     per-partition ROW budget — see the repartition note below."""
-    cols = set(documents.columns)
-    df = ensure_text(documents)
-    if "warc_ts" not in cols:
-        df = df.withColumn("warc_ts", F.lit(None).cast("timestamp"))
-    if "lang" not in cols:
-        df = df.withColumn("lang", F.lit(None).cast("string"))
-    df = with_doc_id(df)
-    narrow = df.select("doc_id", "url", "warc_ts", "lang", "text")
+    narrow = conform_documents(documents).select(
+        "doc_id", "url", "warc_ts", "lang", "text"
+    )
     # The signing stage is the CPU-heaviest Python work in the pipeline; a
     # small input (few parquet splits) would otherwise cap its parallelism at
     # the split count regardless of cluster size.  Round-robin repartition to

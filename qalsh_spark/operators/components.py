@@ -6,23 +6,24 @@ Algorithm: min-label propagation with an adjacency that is symmetrized once.
 Each iteration every vertex takes min(own label, neighbors' labels); a
 localCheckpoint truncates the lineage so the plan doesn't grow exponentially.
 Convergence is O(graph diameter) iterations; the pair generator's star rule
-(operators/pairs.py) keeps hot-bucket components at diameter 2, so in practice
-this converges in a handful of rounds even on 10^12-doc inputs.
+(operators/pairs.py) keeps hot-bucket components at diameter 2, but a drift
+chain (a page recrawled with small edits each time) costs one round per hop.
 
 Shuffle discipline: the adjacency is hash-partitioned by the iteration join
 key (dst) ONCE and localCheckpoint'd — checkpoint preserves partitioning
 (when AQE is off, the below-10M default), and the labels side is always
 partitioned by doc_id as a groupBy/join output, so each iteration costs ONE
-exchange (the neighbor-min aggregate) instead of three.  Convergence
-detection is an O(1) decimal label-sum over the checkpointed labels — labels
-only decrease, so an unchanged sum means a fixed point.
+exchange (the neighbor-min aggregate) instead of three.  Convergence rides
+on that same job: an Observation counts the labels the round lowers while
+the eager checkpoint writes them, so a round is one Spark job and no
+collect; a round that lowers none is the fixed point.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 # Storage level for every lineage-truncating checkpoint of a LARGE DataFrame.
 # The JVM default for Dataset.localCheckpoint is Scala's MEMORY_AND_DISK,
@@ -44,8 +45,8 @@ assert not _CKPT_LEVEL.deserialized, (
     "_CKPT_LEVEL must be a serialized storage level (see OOM note above)"
 )
 
-# bound on label-propagation rounds (the star rule keeps hot components
-# at diameter 2, so real inputs converge in a handful)
+# Runaway bound on label-propagation rounds.  A component whose diameter
+# needs more rounds raises RuntimeError instead of returning split clusters.
 MAX_ITER = 50
 
 
@@ -69,20 +70,15 @@ def _release_checkpoint(df: DataFrame) -> None:
 
 def connected_components(edges: DataFrame) -> DataFrame:
     """edges(a, b) -> components(doc_id, cluster_id) for every vertex that
-    appears in an edge. cluster_id = min doc_id in the component.  At most
-    MAX_ITER propagation rounds run."""
+    appears in an edge. cluster_id = min doc_id in the component.  Raises
+    RuntimeError if labels still change after MAX_ITER propagation rounds."""
     # Symmetrize with ONE scan via explode instead of a self-union: Spark's
     # plan canonicalization fails to reuse cache/exchange across self-union
     # branches (measured 50x slower), and explode halves the input reads at
     # any scale.  No distinct: the edge list is already one row per (a,b)
     # (verify folds lanes; exact/escalation edges are disjoint by
-    # construction), so both directions are unique.
-    #
-    # Repartition by the iteration join key ONCE: localCheckpoint preserves
-    # the partitioning, so every loop iteration's sym-side of the neighbor
-    # join needs no exchange, and the labels side is always partitioned by
-    # doc_id (groupBy/join outputs) — the per-iteration cost drops to ONE
-    # exchange (the groupBy(src) aggregate) instead of three.
+    # construction), so both directions are unique.  Repartitioned by dst
+    # ONCE (see "Shuffle discipline" above).
     sym = (
         edges.select(
             F.explode(
@@ -96,23 +92,15 @@ def connected_components(edges: DataFrame) -> DataFrame:
         .repartition(F.col("dst"))
     )
     sym = sym.localCheckpoint(True, _CKPT_LEVEL)
+    # first(src) is the vertex itself, so the initial label already
+    # includes it: min over the closed neighbourhood.
     labels = (
         sym.groupBy("src")
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
         .withColumnRenamed("src", "doc_id")
-        .withColumn("label", F.least(F.col("label"), F.col("doc_id")))
         .localCheckpoint(True, _CKPT_LEVEL)
     )
 
-    # Labels only ever decrease, so the exact (decimal — no int64 overflow)
-    # sum of labels strictly decreases iff ANY label changed: convergence is
-    # one cheap aggregate per iteration instead of a self-join + count.
-    def _label_sum(df: DataFrame) -> object:
-        return df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
     for _ in range(MAX_ITER):
         # neighbor-min pass: label'(v) = min(label(v), min_{u~v} label(u))
         neigh = (
@@ -121,26 +109,30 @@ def connected_components(edges: DataFrame) -> DataFrame:
             .agg(F.min("label").alias("nbr_label"))
             .withColumnRenamed("src", "doc_id")
         )
+        lowered = Observation()  # filled by the eager checkpoint's own job
         new_labels = (
             labels.join(neigh, on="doc_id", how="left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
+            .observe(
+                lowered,
+                F.count_if(F.col("nbr_label") < F.col("label")).alias("n"),
             )
+            .select("doc_id", F.least("label", "nbr_label").alias("label"))
             .localCheckpoint(True, _CKPT_LEVEL)
         )
-        new_sum = _label_sum(new_labels)
         # The superseded labels checkpoint is dead the moment new_labels is
         # materialized (eager ckpt) — release it now so the loop caches at
         # most 2 labels RDDs (prev + new) at any instant, deterministically,
         # instead of O(iterations) frames awaiting the ContextCleaner.
         _release_checkpoint(labels)
         labels = new_labels
-        if new_sum == prev_sum:
+        changed = lowered.get["n"]
+        if changed == 0:
             break
-        prev_sum = new_sum
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_ITER} rounds: "
+            f"{changed} labels still changed in the last round"
+        )
     # sym is not referenced by the returned (checkpointed) labels frame.
     _release_checkpoint(sym)
     return labels.withColumnRenamed("label", "cluster_id")

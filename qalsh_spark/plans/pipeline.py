@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from qalsh_spark.config import DedupConfig
-from qalsh_spark.functions.signatures import sign_documents, with_doc_id
+from qalsh_spark.functions.signatures import conform_documents, sign_documents
 from qalsh_spark.operators.banding import SUFFIX_BUCKET_CAP, explode_bands
 from qalsh_spark.operators.components import (
     clusters_with_representatives,
@@ -288,19 +288,7 @@ def _prepare(documents: DataFrame) -> DataFrame:
     (text_len, text_hash) pair for the exact-group pre-pass.  Output:
     (url, warc_ts, lang, text, doc_id, text_len, text_hash) — the narrow
     table every later stage joins against."""
-    from qalsh_spark.functions.signatures import ensure_text
-
-    cols = set(documents.columns)
-    # ensure_text carries the split-union extraction (see its docstring for
-    # the ArrowEvalPython-hoisting rationale) shared with sign_documents and
-    # the streaming dedup path.
-    df = ensure_text(documents)
-    if "warc_ts" not in cols:
-        df = df.withColumn("warc_ts", F.lit(None).cast("timestamp"))
-    if "lang" not in cols:
-        df = df.withColumn("lang", F.lit(None).cast("string"))
-    df = with_doc_id(df)
-    return df.select(
+    return conform_documents(documents).select(
         "url", "warc_ts", "lang", "text", "doc_id",
         F.length("text").alias("text_len"),
         F.xxhash64("text").alias("text_hash"),

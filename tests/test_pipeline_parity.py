@@ -12,7 +12,7 @@ import pytest
 
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.datagen import cached_corpus, generate_corpus
-from qalsh_spark.plans.pipeline import DedupPipeline
+from qalsh_spark.plans.pipeline import DedupPipeline, run_dedup
 from tests.oracle import cluster_pairs, dup_pair_recall, run_oracle
 
 N_DOCS = 400
@@ -78,3 +78,22 @@ def test_gold_exact_dups_always_clustered(spark_result, corpus):
     for ids in by_text.values():
         if len(ids) > 1:
             assert len({clusters[d] for d in ids}) == 1
+
+
+@pytest.mark.parametrize(
+    "texts",
+    [[], ["the same page body, recrawled verbatim"] * 300],
+    ids=["empty", "300-identical"],
+)
+def test_edge_corpus_clusters_match_oracle(spark, texts):
+    """Edge inputs a real crawl produces, through run_dedup: an empty corpus
+    gives zero cluster rows, and 300 byte-identical docs give ONE cluster
+    (one exact group: a star of exact edges, whose first round lowers no
+    label)."""
+    urls = [f"https://dup.example/{i}" for i in range(len(texts))]
+    docs = spark.createDataFrame(list(zip(urls, texts)), "url string, text string")
+    res = run_dedup(spark, docs, DedupConfig())
+    got = {r["doc_id"]: r["cluster_id"] for r in res.clusters.collect()}
+    assert got == run_oracle(urls, texts).clusters
+    assert len(set(got.values())) == (1 if texts else 0)
+    res.release()

@@ -20,6 +20,10 @@ same way the plan-shape tests pin the IVF/SRP rewrites.
 
 from __future__ import annotations
 
+import uuid
+
+import pytest
+
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.datagen import cached_corpus
 from qalsh_spark.plans.pipeline import run_dedup
@@ -80,13 +84,18 @@ def test_cc_releases_superseded_checkpoints(spark):
     (and the adjacency) deterministically instead of leaving O(iterations)
     checkpointed RDDs for the ContextCleaner: on a path graph that needs
     several min-propagation rounds, exactly ONE new cached RDD (the final
-    labels checkpoint) may remain after the call returns.  Parity is
-    asserted against the trivial oracle (a path is one component labeled by
-    its min vertex)."""
+    labels checkpoint) may remain after the call returns.  Each round is
+    ONE Spark job: its convergence count is observed on the eager labels
+    checkpoint, so the call runs no `collect` job (29 rounds here: 31 jobs
+    with the adjacency and initial-label checkpoints).  Parity is asserted
+    against the trivial oracle (a path is one component labeled by its min
+    vertex)."""
     from qalsh_spark.operators.components import connected_components
 
+    sc = spark.sparkContext
+
     def cached_ids():
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        infos = sc._jsc.sc().getRDDStorageInfo()
         return {i.id() for i in infos if i.numCachedPartitions() > 0}
 
     before = cached_ids()
@@ -95,7 +104,23 @@ def test_cc_releases_superseded_checkpoints(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "a long, b long"
     )
-    comps = connected_components(edges)
+    # AQE off, as the entry points run inputs below ~10M docs: with it on,
+    # every exchange materializes as a job of its own.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    group = f"cc-jobs-{uuid.uuid4().hex}"
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        comps = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    names = [str(store.job(j).name()) for j in sc.statusTracker().getJobIdsForGroup(group)]
+    assert len(names) <= 32, len(names)
+    assert not [n for n in names if n.startswith("collect at")], names
+
     rows = comps.collect()
     assert {r["doc_id"] for r in rows} == set(range(30))
     assert {r["cluster_id"] for r in rows} == {0}
@@ -106,6 +131,18 @@ def test_cc_releases_superseded_checkpoints(spark):
         f"cached (leaked RDD ids: {sorted(leaked)}) — superseded per-"
         "iteration checkpoints must be released inside the loop"
     )
+
+
+def test_cc_round_cap_raises(spark, monkeypatch):
+    """A component that needs more than MAX_ITER rounds must fail loudly,
+    never come back as several clusters: a 10-vertex path needs 8 lowering
+    rounds, so a cap of 3 raises."""
+    from qalsh_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ITER", 3)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        components.connected_components(edges)
 
 
 def test_sign_partition_count_bounded_by_row_budget(spark):

@@ -3,7 +3,6 @@ from qalsh_spark.functions.text import (
     language_id,
     quality_features,
     token_count_col,
-    content_fingerprint,
 )
 
 __all__ = [
@@ -12,5 +11,4 @@ __all__ = [
     "language_id",
     "quality_features",
     "token_count_col",
-    "content_fingerprint",
 ]

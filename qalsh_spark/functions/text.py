@@ -82,13 +82,6 @@ def quality_score(text: Column) -> Column:
     return F.greatest(F.lit(0.0), F.least(F.lit(1.0), raw))
 
 
-def content_fingerprint(text: Column) -> Column:
-    """Stable 64-bit content fingerprint of normalized text (lowercased,
-    whitespace-collapsed) — the cheap exact-dup key. xxhash64 is JVM-native."""
-    normalized = F.regexp_replace(F.lower(text), "\\s+", " ")
-    return F.xxhash64(normalized)
-
-
 def content_md5(text: Column) -> Column:
     """Portable exact-dup key (md5 hex) — identical semantics in DuckDB, so
     oracle-checkable cross-engine."""

@@ -54,10 +54,10 @@ grouping key would only fatten the engine's highest-volume shuffle.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from qalsh_spark.operators.banding import LANE_NAMES, lane_name_col
+from qalsh_spark.operators.components import _CKPT_LEVEL
 
 
 def _pair_structs(ids_col):
@@ -129,9 +129,7 @@ def candidate_pairs_from_buckets(
     # dual scratch dirs).  Every downstream groupBy/join below clusters on
     # the same keys and therefore runs in-stage on this partitioning — zero
     # further exchanges of the engine's highest-volume stream.
-    bucketed = buckets.repartition(F.col("band_key")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    bucketed = buckets.repartition(F.col("band_key")).persist(_CKPT_LEVEL)
     if persists is not None:
         persists.append(bucketed)
 
@@ -151,7 +149,7 @@ def candidate_pairs_from_buckets(
     hot = F.broadcast(
         sizes.filter(sz > cap)
         .select("band_key", "lane_id", "hub")
-        .localCheckpoint(True, StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(True, _CKPT_LEVEL)
     )
 
     # Pass 2a — small buckets (2 <= size <= cap): members of hot buckets are

@@ -31,6 +31,7 @@ from qalsh_spark.config import DedupConfig
 from qalsh_spark.functions.signatures import conform_documents, sign_documents
 from qalsh_spark.operators.banding import SUFFIX_BUCKET_CAP, explode_bands
 from qalsh_spark.operators.components import (
+    _CKPT_LEVEL,
     clusters_with_representatives,
     connected_components,
 )
@@ -189,8 +190,6 @@ class DedupPipeline:
                 # pressure would otherwise be re-inflated whole into the
                 # memory store on every read (maybeCacheDiskValuesInMemory),
                 # which OOM-killed the 24g 4M-doc scaling leg.
-                from qalsh_spark.operators.components import _CKPT_LEVEL
-
                 df = df.persist(_CKPT_LEVEL)
                 persists.append(df)
             return df
@@ -259,8 +258,6 @@ class DedupPipeline:
                 # MEMORY_AND_DISK) re-inflates disk-spilled blocks as Java
                 # objects on every read — heap OOM at leg scale (see
                 # operators/components._CKPT_LEVEL).
-                from qalsh_spark.operators.components import _CKPT_LEVEL
-
                 edges_df = edges_df.localCheckpoint(True, _CKPT_LEVEL)
                 pairs2 = self._escalation_pairs(signatures, edges_df, persists)
                 # endpoints of escalated pairs are all unmatched docs, so

@@ -31,6 +31,7 @@ sys.path.insert(0, REPO)
 
 from qalsh_spark import kernels as K  # noqa: E402
 from qalsh_spark.config import DedupConfig  # noqa: E402
+from tests.oracle import pairs_with_cap, run_oracle  # noqa: E402
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 GOLDEN = os.path.join(REPO, "golden")
@@ -105,9 +106,9 @@ def _dot_spark(a32: np.ndarray, b32: np.ndarray) -> float:
 def build_neardup(sf_dir: str, threshold=0.4, m=24, bands=8, seed=6, cap=64) -> pa.Table:
     """Golden for q_embedding_near_dup: same SRP kernel call as the Spark
     UDF (kernels.srp_band_keys_matrix on float64), the same CAPPED bucket
-    pairing as operators/pairs.candidate_pairs_from_buckets (buckets over
-    `cap` members emit star-to-hub pairs, hub = min id, instead of all
-    C(n,2)), and a bit-exact replication of the JVM cosine verify
+    pairing as operators/pairs.candidate_pairs_from_buckets
+    (tests/oracle.pairs_with_cap: buckets over `cap` members emit
+    star-to-hub pairs, hub = min id, instead of all C(n,2)), and a bit-exact replication of the JVM cosine verify
     (float32 products + left-to-right double fold + HALF_UP round-4).
     Verified exact-equal to the live Spark output at every sf dir."""
     fp, ids, emb32 = embeddings_fp(sf_dir)
@@ -119,19 +120,8 @@ def build_neardup(sf_dir: str, threshold=0.4, m=24, bands=8, seed=6, cap=64) -> 
         for key in row.tolist():
             buckets.setdefault(key, []).append(int(ids[i]))
     idx = {int(v): i for i, v in enumerate(ids)}
-    cand: set[tuple[int, int]] = set()
-    for members in buckets.values():
-        ms = sorted(set(members))
-        if len(ms) > cap:
-            hub = ms[0]
-            for y in ms[1:]:
-                cand.add((hub, y))
-            continue
-        for x in range(len(ms)):
-            for y in range(x + 1, len(ms)):
-                cand.add((ms[x], ms[y]))
     rows = []
-    for a, b in sorted(cand):
+    for a, b in sorted(pairs_with_cap(buckets, cap)):
         va, vb = emb32[idx[a]], emb32[idx[b]]
         num = _dot_spark(va, vb)
         den = np.sqrt(_dot_spark(va, va)) * np.sqrt(_dot_spark(vb, vb))
@@ -155,8 +145,6 @@ def build_clusters(sf_dir: str, cfg: DedupConfig) -> pa.Table:
     frozen as (doc_id, cluster_id, cluster_size) keyed by corpus_fp."""
     import collections
 
-    from tests.oracle import run_oracle
-
     orig, texts = load_docs(sf_dir)
     fp = corpus_fp(list(texts))
     urls = [f"synthetic://doc/{int(o)}" for o in orig]
@@ -173,24 +161,6 @@ def build_clusters(sf_dir: str, cfg: DedupConfig) -> pa.Table:
             ),
         }
     )
-
-
-def pairs_with_cap(buckets: dict, cap: int) -> set[tuple[int, int]]:
-    """operators/pairs.py cap/star rule, single-process."""
-    out: set[tuple[int, int]] = set()
-    for members in buckets.values():
-        ms = sorted(set(members))
-        if len(ms) < 2:
-            continue
-        if len(ms) <= cap:
-            for x in range(len(ms)):
-                for y in range(x + 1, len(ms)):
-                    out.add((ms[x], ms[y]))
-        else:
-            hub = ms[0]
-            for m in ms[1:]:
-                out.add((hub, m))
-    return out
 
 
 def build(sf_dir: str, cfg: DedupConfig):

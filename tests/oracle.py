@@ -101,28 +101,23 @@ def run_oracle(
         )
 
     # --- bucket (minhash + simhash lanes) ------------------------------
-    buckets: dict[tuple, list[int]] = collections.defaultdict(list)
+    buckets: dict[str, dict[tuple, list[int]]] = {
+        "minhash": collections.defaultdict(list),
+        "simhash": collections.defaultdict(list),
+    }
     for d in rep_ids:
         for band_id, key in enumerate(sigs[d]["band_keys"]):
-            buckets[("minhash", band_id, int(key))].append(d)
+            buckets["minhash"][(band_id, int(key))].append(d)
         if enable_simhash:
             for band_id, key in enumerate(sigs[d]["simhash_keys"]):
-                buckets[("simhash", band_id, int(key))].append(d)
+                buckets["simhash"][(band_id, int(key))].append(d)
 
     # --- pairs with the cap/star rule (operators/pairs.py parity) ------
     pairs: set[tuple[int, int, str]] = set()
-    for (lane, _bid, _key), members in buckets.items():
-        if len(members) < 2:
-            continue
-        ms = sorted(set(members))
-        if len(ms) <= cfg.bucket_cap:
-            for x in range(len(ms)):
-                for y in range(x + 1, len(ms)):
-                    pairs.add((ms[x], ms[y], lane))
-        else:
-            hub = ms[0]
-            for m in ms[1:]:
-                pairs.add((hub, m, lane))
+    for lane, lane_buckets in buckets.items():
+        pairs |= {
+            (x, y, lane) for x, y in pairs_with_cap(lane_buckets, cfg.bucket_cap)
+        }
 
     # --- suffix lane (operators/banding.LANE_SUFFIX parity) -------------
     # Bucket key = k1 hash of the lcp_min bytes after each content-defined
@@ -130,28 +125,19 @@ def run_oracle(
     # match (128-bit test, kernels.suffix_key_pairs_for_text).
     suffix_tuples: dict[int, set[tuple[int, int]]] = {}
     if enable_suffix:
-        sbuckets: dict[int, set[int]] = collections.defaultdict(set)
+        sbuckets: dict[int, list[int]] = collections.defaultdict(list)
         for d in rep_ids:
             k1s, k2s = K.suffix_key_pairs_for_text(
                 by_id[d], cfg.suffix_window, cfg.suffix_gap, cfg.lcp_min
             )
             suffix_tuples[d] = set(zip(k1s.tolist(), k2s.tolist()))
             for k in k1s:
-                sbuckets[int(k)].add(d)
+                sbuckets[int(k)].append(d)
         from qalsh_spark.operators.banding import SUFFIX_BUCKET_CAP
 
-        for _key, dset in sbuckets.items():
-            ds = sorted(dset)
-            if len(ds) < 2:
-                continue
-            if len(ds) <= SUFFIX_BUCKET_CAP:
-                for x in range(len(ds)):
-                    for y in range(x + 1, len(ds)):
-                        pairs.add((ds[x], ds[y], "suffix"))
-            else:  # star rule (operators/pairs.py hot-bucket parity)
-                hub = ds[0]
-                for m in ds[1:]:
-                    pairs.add((hub, m, "suffix"))
+        pairs |= {
+            (x, y, "suffix") for x, y in pairs_with_cap(sbuckets, SUFFIX_BUCKET_CAP)
+        }
 
     # --- verify (operators/verify.py per-lane rules) --------------------
     edges: set[tuple[int, int]] = set(exact_edges)
@@ -174,6 +160,24 @@ def run_oracle(
         doc_ids=np.array(ids, dtype=np.int64), signatures=sigs, pairs=pairs,
         edges=edges, clusters=clusters,
     )
+
+
+def pairs_with_cap(buckets: dict, cap: int) -> set[tuple[int, int]]:
+    """operators/pairs.py's cap/star rule, single-process: a bucket of at
+    most `cap` distinct members emits all its (a < b) pairs; a larger one
+    emits a star from its hub (min doc_id) to every other member."""
+    out: set[tuple[int, int]] = set()
+    for members in buckets.values():
+        ms = sorted(set(members))
+        if len(ms) <= cap:
+            for x in range(len(ms)):
+                for y in range(x + 1, len(ms)):
+                    out.add((ms[x], ms[y]))
+        else:
+            hub = ms[0]
+            for m in ms[1:]:
+                out.add((hub, m))
+    return out
 
 
 def hamming64(x: int, y: int) -> int:

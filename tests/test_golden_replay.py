@@ -39,14 +39,29 @@ def test_pstable_replays_match_frozen_golden():
         assert _rows(tables[name], cols) == want, name
 
 
-def test_substring_replay_matches_frozen_golden():
+@pytest.mark.parametrize(
+    "name,cols",
+    [
+        ("substring_pairs", ["corpus_fp", "a", "b", "lane"]),
+        ("simhash_hamming_pairs", ["corpus_fp", "a", "b", "hamming"]),
+    ],
+)
+def test_substring_replay_matches_frozen_golden(name, cols):
     from qalsh_spark.config import DedupConfig
 
     mod = _mg()
     fp = mod.corpus_fp(mod.load_docs(SF)[1])
-    got = mod.build(SF, DedupConfig())["substring_pairs"]
-    t = pq.read_table(os.path.join(REPO, "golden", "substring_pairs.parquet"))
-    cols = ["corpus_fp", "a", "b", "lane"]
+    got = mod.build(SF, DedupConfig())[name]
+    t = pq.read_table(os.path.join(REPO, "golden", f"{name}.parquet"))
     want = [r for r in _rows(t, cols) if r[0] == fp]
-    assert want, "golden substring_pairs has no rows for this corpus"
+    assert want, f"golden {name} has no rows for this corpus"
     assert _rows(got, cols) == want
+
+
+def test_neardup_replay_matches_frozen_golden():
+    mod = _mg()
+    fp, _ids, _emb = mod.embeddings_fp(SF)
+    cols = ["a", "b", "cos"]
+    want = _golden_rows("embedding_near_dup", fp, cols)
+    assert want, "golden embedding_near_dup has no rows for this corpus"
+    assert _rows(mod.build_neardup(SF), cols) == want

@@ -6,6 +6,11 @@
 (b) `dist/qalsh_spark.zip`, the spark-submit distribution, holds exactly
     the package's `.py` files, byte for byte — rebuild it with
     `scripts/package.sh` after any change under `qalsh_spark/`.
+(c) Every public top-level function or class under `qalsh_spark/` is
+    referenced outside its own body by some module, job, script or test.
+    A package `__init__.py` re-export is not a reference.  The match is by
+    name, so a dead helper that shares its name with a live one slips by;
+    it never flags live code.
 """
 
 from __future__ import annotations
@@ -18,6 +23,8 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCE_DIRS = ("qalsh_spark", "jobs", "scripts")
+# every directory whose code may be the one caller of a package function
+REFERENCE_DIRS = SOURCE_DIRS + ("tests", "perfbench")
 
 
 def _package_files(root: str = "qalsh_spark") -> list[str]:
@@ -93,3 +100,54 @@ def test_dist_zip_matches_package_sources():
             if fh.read() != zipped[f]:
                 stale.append(f)
     assert not stale, f"stale in dist/qalsh_spark.zip (run scripts/package.sh): {stale}"
+
+
+def _references(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Names loaded or attribute-accessed anywhere in `tree` except inside
+    the `skip` node (a definition's own body)."""
+    out: set[str] = set()
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def _unreferenced_package_defs() -> list[str]:
+    trees: dict[str, ast.AST] = {}
+    files = [f for f in os.listdir(REPO) if f.endswith(".py")]
+    for root in REFERENCE_DIRS:
+        files += _package_files(root)
+    for f in files:
+        if os.path.basename(f) == "__init__.py":
+            continue  # a re-export is not a use
+        with open(os.path.join(REPO, f)) as fh:
+            trees[f] = ast.parse(fh.read())
+    refs = {f: _references(t) for f, t in trees.items()}
+    dead = []
+    for f in _package_files():
+        with open(os.path.join(REPO, f)) as fh:
+            tree = ast.parse(fh.read())
+        for node in tree.body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or node.name.startswith("_"):
+                continue
+            used = any(
+                node.name in (_references(t, skip=node) if g == f else refs[g])
+                for g, t in trees.items()
+            )
+            if not used:
+                dead.append(f"{f}: {node.name}")
+    return dead
+
+
+def test_every_package_def_is_referenced():
+    dead = _unreferenced_package_defs()
+    assert not dead, f"public definitions nothing references: {dead}"

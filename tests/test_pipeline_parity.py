@@ -12,6 +12,7 @@ import pytest
 
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.datagen import cached_corpus, generate_corpus
+from qalsh_spark.functions.signatures import extract_text_bytes
 from qalsh_spark.plans.pipeline import DedupPipeline, run_dedup
 from tests.oracle import cluster_pairs, dup_pair_recall, run_oracle
 
@@ -80,20 +81,45 @@ def test_gold_exact_dups_always_clustered(spark_result, corpus):
             assert len({clusters[d] for d in ids}) == 1
 
 
+_BAD_UTF8 = b"<p>caf\xe9 menu with soup, bread and a glass of house wine</p>"
+_BAD_UTF8_2 = b"<p>\xff\xfe ticket desk opens at nine; trains leave hourly</p>"
+_CRAWL_ROWS = [
+    (None, None),
+    (None, None),
+    (None, _BAD_UTF8),
+    (None, _BAD_UTF8),
+    (None, _BAD_UTF8_2),
+    (None, _BAD_UTF8_2),
+    (extract_text_bytes(_BAD_UTF8), None),
+]
+
+
 @pytest.mark.parametrize(
-    "texts",
-    [[], ["the same page body, recrawled verbatim"] * 300],
-    ids=["empty", "300-identical"],
+    "rows,n_clusters",
+    [
+        ([], 0),
+        ([("the same page body, recrawled verbatim", None)] * 300, 1),
+        (_CRAWL_ROWS, 3),
+    ],
+    ids=["empty", "300-identical", "null-and-invalid-utf8"],
 )
-def test_edge_corpus_clusters_match_oracle(spark, texts):
-    """Edge inputs a real crawl produces, through run_dedup: an empty corpus
-    gives zero cluster rows, and 300 byte-identical docs give ONE cluster
-    (one exact group: a star of exact edges, whose first round lowers no
-    label)."""
-    urls = [f"https://dup.example/{i}" for i in range(len(texts))]
-    docs = spark.createDataFrame(list(zip(urls, texts)), "url string, text string")
+def test_edge_corpus_clusters_match_oracle(spark, rows, n_clusters):
+    """Edge inputs a real crawl produces, through run_dedup against the
+    oracle over `text if text is not None else extract_text_bytes(html)`:
+    - an empty corpus gives zero cluster rows;
+    - 300 byte-identical docs give ONE cluster (one exact group: a star of
+      exact edges, whose first round lowers no label);
+    - the two rows with null text and null html form one exact group of
+      "", and the "replace" decode of invalid UTF-8 html puts the text row
+      that equals it in the html rows' exact group."""
+    urls = [f"https://dup.example/{i}" for i in range(len(rows))]
+    docs = spark.createDataFrame(
+        [(u, t, h) for u, (t, h) in zip(urls, rows)],
+        "url string, text string, html binary",
+    )
     res = run_dedup(spark, docs, DedupConfig())
     got = {r["doc_id"]: r["cluster_id"] for r in res.clusters.collect()}
+    texts = [t if t is not None else extract_text_bytes(h) for t, h in rows]
     assert got == run_oracle(urls, texts).clusters
-    assert len(set(got.values())) == (1 if texts else 0)
+    assert len(set(got.values())) == n_clusters
     res.release()

@@ -39,14 +39,7 @@ def test_pstable_replays_match_frozen_golden():
         assert _rows(tables[name], cols) == want, name
 
 
-@pytest.mark.parametrize(
-    "name,cols",
-    [
-        ("substring_pairs", ["corpus_fp", "a", "b", "lane"]),
-        ("simhash_hamming_pairs", ["corpus_fp", "a", "b", "hamming"]),
-    ],
-)
-def test_substring_replay_matches_frozen_golden(name, cols):
+def _assert_pair_replay(name: str, cols: list[str]) -> None:
     from qalsh_spark.config import DedupConfig
 
     mod = _mg()
@@ -56,6 +49,14 @@ def test_substring_replay_matches_frozen_golden(name, cols):
     want = [r for r in _rows(t, cols) if r[0] == fp]
     assert want, f"golden {name} has no rows for this corpus"
     assert _rows(got, cols) == want
+
+
+def test_substring_replay_matches_frozen_golden():
+    _assert_pair_replay("substring_pairs", ["corpus_fp", "a", "b", "lane"])
+
+
+def test_simhash_replay_matches_frozen_golden():
+    _assert_pair_replay("simhash_hamming_pairs", ["corpus_fp", "a", "b", "hamming"])
 
 
 def test_neardup_replay_matches_frozen_golden():

@@ -121,15 +121,24 @@ def minhash_params(num_perm: int = 128, seed: int = 6) -> tuple[np.ndarray, np.n
     return a, b
 
 
+_MINHASH_BLOCK = 8192  # shingle rows per (block, num_perm) temporary
+
+
 def minhash_from_shingles(
     shingles: np.ndarray, a: np.ndarray, b: np.ndarray
 ) -> np.ndarray:
     """128-perm MinHash: min over shingles of (a_i*s + b_i) mod 2^64, top 32
-    bits kept -> int32 array (FIXTURES.md §2 schema)."""
+    bits kept -> int32 array (FIXTURES.md §2 schema).  The min is taken
+    over blocks of `_MINHASH_BLOCK` shingles, so the temporary stays
+    (block, num_perm) however long the document: a 10 MB page (1.7M
+    shingles) would otherwise allocate a 1.7 GB matrix.  Min is
+    associative, so the result is bit-identical to one full-matrix min."""
+    mh64 = np.full(len(a), np.iinfo(np.uint64).max, dtype=np.uint64)
     with np.errstate(over="ignore"):
-        v = shingles[:, None] * a[None, :]
-        v += b[None, :]  # in place: one (n_shingles, num_perm) temp, not two
-    mh64 = v.min(axis=0)
+        for i in range(0, len(shingles), _MINHASH_BLOCK):
+            v = shingles[i : i + _MINHASH_BLOCK, None] * a[None, :]
+            v += b[None, :]  # in place: one (block, num_perm) temp, not two
+            np.minimum(mh64, v.min(axis=0), out=mh64)
     return (mh64 >> np.uint64(32)).astype(np.uint32).view(np.int32)
 
 

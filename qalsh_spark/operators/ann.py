@@ -421,7 +421,10 @@ def pstable_topk(
     ONE plan over R = max(1, max_rounds) rounds.  Round r uses the cells
     `shiftright(cell, r)` — an exact halving of the grid, bucket width
     w * 2^r — and the rounds nest: a projection that collides at round r
-    collides at every later round.  So:
+    collides at every later round.  The grid ratio is therefore 2, while
+    the reference grows the radius by `c`; `c != 2` with `max_rounds > 1`
+    raises ValueError rather than run a schedule it does not implement.
+    So:
 
       - discovery: both sides are signed once (pstable_cells_udf) and
         joined once, query cells broadcast, on `(j, cell >> (R-1))`, the
@@ -450,6 +453,11 @@ def pstable_topk(
     pays the collision rows of round R-1.  `max_rounds` 0 and 1 both
     mean the single pass at width `w`.  `persists` is accepted for
     callers that collect caches to release; this lane appends nothing."""
+    if c != 2 and max_rounds > 1:
+        raise ValueError(
+            f"pstable_topk: virtual rehashing doubles the grid each round; c={c} "
+            "needs a ratio-c schedule this lane does not implement"
+        )
     if w is None:
         if radius is None:
             raise ValueError("pstable_topk: pass w or radius")

@@ -70,6 +70,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.python.worker.reuse", "true")
+        # Every Python worker forks from this daemon: it preloads the heavy
+        # imports, freezes that heap so the per-task gc.collect() skips it,
+        # and (Python < 3.13) stops each task's importlib.invalidate_caches()
+        # from re-parsing unchanged zip archives such as pyspark.zip —
+        # together ~0.2 CPU-s per task (qalsh_spark/daemon.py).
         .config("spark.python.daemon.module", "qalsh_spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         # The engine's big equi-joins (bucket-size join, pair->signature

@@ -54,6 +54,18 @@ def test_minhash_estimates_jaccard():
     assert abs(est - true_j) < 0.15  # 128 perms -> sd ~= 0.044
 
 
+def test_minhash_blocks_match_one_full_matrix_min():
+    """MinHash takes its min over bounded shingle blocks; across several
+    blocks and a ragged tail it equals the min of the full
+    (n_shingles, num_perm) matrix bit for bit."""
+    rng = np.random.default_rng(1)
+    sh = np.unique(rng.integers(0, 2**63, size=3 * K._MINHASH_BLOCK + 5, dtype=np.uint64))
+    with np.errstate(over="ignore"):
+        full = (sh[:, None] * A[None, :] + B[None, :]).min(axis=0)
+    want = (full >> np.uint64(32)).astype(np.uint32).view(np.int32)
+    assert np.array_equal(K.minhash_from_shingles(sh, A, B), want)
+
+
 def test_minhash_identical_docs():
     assert np.array_equal(_mh("the quick brown fox"), _mh("the quick brown fox"))
     assert float(np.mean(_mh("aaa bbb ccc ddd") == _mh("zzz yyy xxx www"))) < 0.2

@@ -8,6 +8,7 @@ plus exact edge-set parity expectations.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from qalsh_spark.config import DedupConfig
@@ -94,16 +95,31 @@ _CRAWL_ROWS = [
 ]
 
 
+def _ten_megabyte_rows() -> list[tuple[str, None]]:
+    """A 10 MB page (~1.5M shingles), a near-dup of it with one word in
+    ~10,000 replaced, and four small pages."""
+    rng = np.random.default_rng(3)
+    vocab = np.array([f"w{i}" for i in range(50_000)])
+    words = vocab[rng.integers(0, len(vocab), size=1_700_000)].tolist()
+    big = " ".join(words)[:10_000_000]
+    for i in rng.choice(len(words) - 1, size=len(words) // 10_000, replace=False):
+        words[i] = "edited"
+    near = " ".join(words)[:10_000_000]
+    small = [" ".join(vocab[rng.integers(0, len(vocab), size=300)]) for _ in range(4)]
+    return [(t, None) for t in [big, near, *small]]
+
+
 @pytest.mark.parametrize(
-    "rows,n_clusters",
+    "make_rows,n_clusters",
     [
-        ([], 0),
-        ([("the same page body, recrawled verbatim", None)] * 300, 1),
-        (_CRAWL_ROWS, 3),
+        (lambda: [], 0),
+        (lambda: [("the same page body, recrawled verbatim", None)] * 300, 1),
+        (lambda: _CRAWL_ROWS, 3),
+        (_ten_megabyte_rows, 5),  # built when the case runs: ~190 MB of str
     ],
-    ids=["empty", "300-identical", "null-and-invalid-utf8"],
+    ids=["empty", "300-identical", "null-and-invalid-utf8", "10mb-page"],
 )
-def test_edge_corpus_clusters_match_oracle(spark, rows, n_clusters):
+def test_edge_corpus_clusters_match_oracle(spark, make_rows, n_clusters):
     """Edge inputs a real crawl produces, through run_dedup against the
     oracle over `text if text is not None else extract_text_bytes(html)`:
     - an empty corpus gives zero cluster rows;
@@ -111,7 +127,11 @@ def test_edge_corpus_clusters_match_oracle(spark, rows, n_clusters):
       exact edges, whose first round lowers no label);
     - the two rows with null text and null html form one exact group of
       "", and the "replace" decode of invalid UTF-8 html puts the text row
-      that equals it in the html rows' exact group."""
+      that equals it in the html rows' exact group;
+    - a 10 MB page and its near-dup form one cluster, each small page its
+      own: signing takes MinHash over bounded shingle blocks, so the page
+      needs no (n_shingles x num_perm) matrix."""
+    rows = make_rows()
     urls = [f"https://dup.example/{i}" for i in range(len(rows))]
     docs = spark.createDataFrame(
         [(u, t, h) for u, (t, h) in zip(urls, rows)],

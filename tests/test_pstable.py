@@ -119,6 +119,22 @@ def test_pstable_one_round_contract(spark):
         assert empty.count() == 0
 
 
+def test_pstable_rehash_rejects_grid_ratio_other_than_two(spark):
+    """Virtual rehashing halves the grid each round, so its radius ratio
+    is 2: `c != 2` with more than one round raises instead of running a
+    radius schedule that is not the reference's (radius * c per round).
+    A single pass has no schedule, so any `c` still builds there."""
+    from qalsh_spark.operators.ann import pstable_topk
+
+    vec, q = _embedding_frames(spark, n=50, nq=2)
+    kw = dict(k=5, p=2.0, w=2.0, m=8, min_collisions=4)
+    for c in (1.5, 3.0):
+        with pytest.raises(ValueError, match="doubles the grid"):
+            pstable_topk(vec, q, c=c, max_rounds=2, **kw)
+        pstable_topk(vec, q, c=c, max_rounds=1, **kw)
+    pstable_topk(vec, q, c=2.0, max_rounds=2, **kw)
+
+
 def test_pstable_alpha_sane():
     for p in (0.5, 1.0, 2.0):
         a = K.pstable_alpha(p, K.pstable_w(2.0, p), 2.0)
